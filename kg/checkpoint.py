@@ -135,7 +135,12 @@ class CheckpointedPipeline:
         if done:
             todo = bucketed_input.where(~F.col("url_hash_bucket").isin(*done))
         t0 = time.monotonic()
-        if todo.limit(1).isEmpty():
+        # every todo bucket is durable after the write, empty ones included
+        todo_buckets = sorted(
+            r[0]
+            for r in todo.select("url_hash_bucket").distinct().collect()
+        )
+        if not todo_buckets:
             return self.read_stage(stage)
 
         out = fn(todo)
@@ -161,11 +166,6 @@ class CheckpointedPipeline:
         )
         wall_ms = (time.monotonic() - t0) * 1000.0
 
-        # every todo bucket is now durable, including empty-output buckets
-        todo_buckets = sorted(
-            r[0]
-            for r in todo.select("url_hash_bucket").distinct().collect()
-        )
         # count ONLY the buckets this run wrote — partition pruning keeps the
         # scan to the todo partitions; counting the whole stage output would
         # re-read every previously-completed bucket on each resume.

@@ -9,7 +9,8 @@ Usage (cluster):
     zip -r kg.zip kg
     spark-submit --py-files kg.zip run_pipeline.py --pages s3://... --out s3://...
 
-Stages (each checkpointed per url_hash_bucket; see kg/checkpoint.py):
+Stages (extract, links, mentions, triples and link write their tables
+checkpointed per url_hash_bucket; see kg/checkpoint.py):
   extract   pages -> docs (Arrow mapInPandas, byte-identical extraction)
   links     pages -> hyperlink table (pure-map anchor extraction +
             URL resolution/normalization), plus derived link_host_graph,
@@ -42,6 +43,12 @@ Stages (each checkpointed per url_hash_bucket; see kg/checkpoint.py):
             sampling table; opt-in via --stages)
   analytics graph -> pagerank / degree stats / triangle+clustering tables
             (KG consumption layer, kg/graphstats.py)
+
+Every stage reads its inputs from the tables under --out, so any --stages
+subset runs once the tables it reads exist; otherwise the run stops with a
+message naming the missing table. The bucketed stages resume per bucket
+(a bucket with a lineage row under the same options is skipped); every
+other table is rewritten whole on each run.
 """
 
 from __future__ import annotations
@@ -49,6 +56,15 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
+
+# every stage, in the order main runs them
+STAGES = (
+    "extract", "links", "mentions", "triples", "link", "canon", "curate",
+    "clean", "filter", "rewrite", "graph", "facts", "kgtrain", "analytics",
+)
+# stages left out of the default --stages list
+OPT_IN = ("curate", "clean", "filter", "rewrite", "kgtrain")
 
 
 def parse_args(argv):
@@ -77,15 +93,30 @@ def parse_args(argv):
     )
     p.add_argument(
         "--stages",
-        default="extract,links,mentions,triples,link,canon,graph,facts,analytics",
-        help="comma list of stages to run "
-        "(also: curate, clean, filter, rewrite, kgtrain)",
+        default=",".join(s for s in STAGES if s not in OPT_IN),
+        help=f"comma list of stages to run, from {','.join(STAGES)} "
+        f"(default: all but {','.join(OPT_IN)})",
     )
     p.add_argument(
         "--max-docs-per-host", type=int, default=1000,
         help="per-host contribution cap for the curate stage",
     )
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    args.stages = {s.strip() for s in args.stages.split(",")}
+    unknown = args.stages.difference(STAGES)
+    if unknown:
+        p.error(
+            f"unknown --stages name(s): {', '.join(map(repr, sorted(unknown)))}"
+            f"; valid names: {', '.join(STAGES)}"
+        )
+    return args
+
+
+def run_config(args) -> dict:
+    """The options that change what the bucketed stages write: a committed
+    bucket is only reused by a run with the same values."""
+    keys = ("salted_linking", "pages", "markup", "coref", "alias_dict", "n_salts")
+    return {k: getattr(args, k) for k in keys}
 
 
 def main(argv=None) -> int:
@@ -106,29 +137,51 @@ def main(argv=None) -> int:
     # embedding-safe: only stop the session if this run created it
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name="kg-pipeline")
-    stages = set(args.stages.split(","))
+    stages = args.stages
     t_start = time.monotonic()
 
     pipe = CheckpointedPipeline(
-        spark,
-        args.out,
-        n_buckets=args.buckets,
-        run_config={"salted": args.salted_linking, "pages": args.pages},
+        spark, args.out, n_buckets=args.buckets, run_config=run_config(args)
     )
+
+    def read(name, stage):
+        if not Path(pipe.stage_output_path(name)).exists():
+            sys.exit(
+                f"run_pipeline: stage {stage!r} reads table {name!r}, which "
+                f"is not under {args.out}; run the stage that writes it first"
+            )
+        return pipe.read_stage(name)
+
+    def save(name, df, *partition_cols):
+        # STATIC overwrite (the checkpoint pipeline sets the session to
+        # dynamic): every table written here is a full recompute, so the
+        # whole table is replaced, partitions this run does not write too
+        df.write.partitionBy(*partition_cols).option(
+            "partitionOverwriteMode", "static"
+        ).mode("overwrite").parquet(pipe.stage_output_path(name))
+
+    def alias_dim():
+        if args.alias_dict:
+            return spark.read.parquet(args.alias_dict)
+        return spark.createDataFrame(synth.alias_df())
+
+    def hosted(docs):
+        from kg.ops.webnorm import normalize_urls
+
+        return normalize_urls(docs.select("url", "text")).select(
+            "url", "text", "host"
+        )
 
     pages = add_bucket(spark.read.parquet(args.pages), args.buckets)
 
-    docs = None
     if "extract" in stages:
-        docs = pipe.run_stage(
+        pipe.run_stage(
             "docs",
             pages.select("url", "html", "lang", "url_hash_bucket"),
             lambda df: extract_docs(df).join(
                 df.select("url", "url_hash_bucket"), "url"
             ),
         )
-    else:
-        docs = pipe.read_stage("docs")
 
     if "links" in stages:
         from kg.ops.weblinks import aggregate_host_graph, extract_links
@@ -144,9 +197,7 @@ def main(argv=None) -> int:
         )
         # derived rollups off the checkpointed links table (tiny next to
         # the links themselves; recomputed cheaply on every run)
-        aggregate_host_graph(links).write.mode("overwrite").parquet(
-            f"{args.out}/link_host_graph"
-        )
+        save("link_host_graph", aggregate_host_graph(links))
         crawled = normalize_urls(pages.select("url")).select(
             F.col("url_norm").alias("dst_url")
         )
@@ -170,19 +221,17 @@ def main(argv=None) -> int:
             frontier = robots_filter_frontier(
                 frontier, rules, url_col="dst_url"
             )
-        frontier.write.mode("overwrite").parquet(
-            f"{args.out}/crawl_frontier"
-        )
+        save("crawl_frontier", frontier)
         # crawler-trap / URL-shape report over everything this crawl saw
         # (page urls + normalized link targets) — pure map + one groupBy
         from kg.ops.webnorm import url_templates
 
-        url_templates(
+        save("url_templates", url_templates(
             pages.select("url").unionByName(
                 links.select(F.col("dst_url").alias("url"))
             ),
             min_count=2,
-        ).write.mode("overwrite").parquet(f"{args.out}/url_templates")
+        ))
 
     if "mentions" in stages:
         from kg.stages.mentions import plan_gazetteer
@@ -192,7 +241,7 @@ def main(argv=None) -> int:
         gplan = plan_gazetteer(gaz)  # per-job dim planning, once
         pipe.run_stage(
             "mentions",
-            docs,
+            read("docs", "mentions"),
             lambda df: detect_mentions(
                 df.select("url", "text"), gaz, rx,
                 plan=gplan, co_partition=True,
@@ -201,7 +250,6 @@ def main(argv=None) -> int:
             ),
         )
 
-    triples = None
     if "triples" in stages:
 
         def _trip(df):
@@ -233,16 +281,9 @@ def main(argv=None) -> int:
                 df.select("url", "url_hash_bucket").distinct(), "url"
             )
 
-        triples = pipe.run_stage("triples", docs, _trip)
-    elif "link" in stages or "graph" in stages:
-        triples = pipe.read_stage("triples")
+        pipe.run_stage("triples", read("docs", "triples"), _trip)
 
-    linked = None
     if "link" in stages:
-        if args.alias_dict:
-            alias_dim = spark.read.parquet(args.alias_dict)
-        else:
-            alias_dim = spark.createDataFrame(synth.alias_df())
 
         def _prep(df):
             t = df.select("url", "subj", "pred", "obj", "conf")
@@ -255,6 +296,7 @@ def main(argv=None) -> int:
                 )
                 from kg.stages.triples import detect_ner_mentions
 
+                docs = read("docs", "link")
                 d = docs.select("url", "text").join(
                     pages.select("url", "lang"), "url"
                 )
@@ -264,30 +306,24 @@ def main(argv=None) -> int:
                 t = rewrite_pronoun_triples(t, res).drop("coref_rewritten")
             return link_triples(
                 t,
-                alias_dim,
+                alias_dim(),
                 use_salting=args.salted_linking,
                 n_salts=args.n_salts,
             ).join(df.select("url", "url_hash_bucket").distinct(), "url")
 
-        linked = pipe.run_stage("linked", triples, _prep)
-    elif "graph" in stages:
-        linked = pipe.read_stage("linked")
+        pipe.run_stage("linked", read("triples", "link"), _prep)
 
     if "canon" in stages:
         # alias universe = dictionary aliases ∪ unlinked corpus surfaces
-        if args.alias_dict:
-            alias_dim = spark.read.parquet(args.alias_dict)
-        else:
-            alias_dim = spark.createDataFrame(synth.alias_df())
+        linked = read("linked", "canon")
         surfaces = (
             linked.select(F.col("subj").alias("alias"))
             .union(linked.select(F.col("obj").alias("alias")))
             .distinct()
             .withColumn("alias_norm", norm_surface_col("alias"))
         )
-        universe = alias_dim.select("alias", "alias_norm").union(surfaces).distinct()
-        canon = canonicalize_aliases(universe)
-        canon.write.mode("overwrite").parquet(f"{args.out}/entities_canonical")
+        universe = alias_dim().select("alias", "alias_norm").union(surfaces).distinct()
+        save("entities_canonical", canonicalize_aliases(universe))
 
     if "curate" in stages:
         # training-corpus verdict over the extracted docs: quality filter ->
@@ -296,15 +332,11 @@ def main(argv=None) -> int:
         # table recomputed off the checkpointed docs stage, not a
         # per-bucket-resumable stage.
         from kg.ops.curation import curate_corpus
-        from kg.ops.webnorm import normalize_urls
 
-        hosted = normalize_urls(docs.select("url", "text")).select(
-            "url", "text", "host"
-        )
-        curate_corpus(
-            hosted, id_col="url", group_col="host",
+        save("corpus_kept", curate_corpus(
+            hosted(read("docs", "curate")), id_col="url", group_col="host",
             max_per_group=args.max_docs_per_host,
-        ).write.mode("overwrite").parquet(f"{args.out}/corpus_kept")
+        ))
 
     if "clean" in stages:
         # ftfy-lite normalization + intra-doc paragraph dedup over the
@@ -317,12 +349,14 @@ def main(argv=None) -> int:
         # collapse would otherwise erase the paragraph structure)
         from kg.ops.textstats import dedupe_paragraphs, normalize_text
 
-        deduped = dedupe_paragraphs(docs.select("url", "text"), id_col="url")
-        normalize_text(
+        deduped = dedupe_paragraphs(
+            read("docs", "clean").select("url", "text"), id_col="url"
+        )
+        save("docs_clean", normalize_text(
             deduped.select("url", "text"), id_col="url"
         ).join(
             deduped.select("url", "n_paragraphs", "n_dropped"), "url"
-        ).write.mode("overwrite").parquet(f"{args.out}/docs_clean")
+        ))
 
     if "filter" in stages:
         # Gopher-ladder verdicts + per-host quality rollup + the
@@ -336,23 +370,14 @@ def main(argv=None) -> int:
             quality_rollup,
             remove_boilerplate_lines,
         )
-        from kg.ops.webnorm import normalize_urls
 
-        gopher_rules(docs.select("url", "text"), id_col="url").write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/gopher_verdicts")
-        hosted = normalize_urls(docs.select("url", "text")).select(
-            "url", "text", "host"
-        )
-        quality_rollup(
-            hosted, group_col="host", id_col="url"
-        ).write.mode("overwrite").parquet(f"{args.out}/host_quality")
-        remove_boilerplate_lines(
-            docs.select("url", "text"), id_col="url"
-        ).write.mode("overwrite").parquet(f"{args.out}/docs_deboiler")
-        dedupe_paragraphs_global(
-            docs.select("url", "text"), id_col="url"
-        ).write.mode("overwrite").parquet(f"{args.out}/docs_para_global")
+        docs = read("docs", "filter").select("url", "text")
+        save("gopher_verdicts", gopher_rules(docs, id_col="url"))
+        save("host_quality", quality_rollup(
+            hosted(docs), group_col="host", id_col="url"
+        ))
+        save("docs_deboiler", remove_boilerplate_lines(docs, id_col="url"))
+        save("docs_para_global", dedupe_paragraphs_global(docs, id_col="url"))
 
     if "rewrite" in stages:
         # ExactSubstr-rewritten corpus + subword fertility stats — the
@@ -362,15 +387,12 @@ def main(argv=None) -> int:
         from kg.ops.dedup import remove_duplicate_substrings
         from kg.ops.subword import subword_tokenize
 
-        remove_duplicate_substrings(
-            docs.select("url", "text"), k=8, id_col="url"
-        ).write.mode("overwrite").parquet(f"{args.out}/corpus_rewritten")
-        subword_tokenize(
-            docs.select("url", "text"), id_col="url"
-        ).write.mode("overwrite").parquet(f"{args.out}/subword_stats")
+        docs = read("docs", "rewrite").select("url", "text")
+        save("corpus_rewritten", remove_duplicate_substrings(docs, k=8, id_col="url"))
+        save("subword_stats", subword_tokenize(docs, id_col="url"))
 
     if "graph" in stages:
-        canon = spark.read.parquet(f"{args.out}/entities_canonical")
+        canon = read("entities_canonical", "graph")
         # min entity_id per norm — dropDuplicates keeps an arbitrary row and
         # would make the graph output partitioning-dependent
         alias_to_entity = (
@@ -381,37 +403,22 @@ def main(argv=None) -> int:
             .groupBy("alias_norm")
             .agg(F.min("_eid").alias("_eid"))
         )
-        g = (
-            linked.withColumn("subj_norm", norm_surface_col("subj"))
-            .join(
+        g = read("linked", "graph")
+        for side in ("subj", "obj"):
+            g = g.withColumn(f"{side}_norm", norm_surface_col(side)).join(
                 F.broadcast(
                     alias_to_entity.select(
-                        F.col("alias_norm").alias("subj_norm"),
-                        F.col("_eid").alias("subj_entity"),
+                        F.col("alias_norm").alias(f"{side}_norm"),
+                        F.col("_eid").alias(f"{side}_entity"),
                     )
                 ),
-                "subj_norm",
+                f"{side}_norm",
                 "left",
             )
-            .withColumn("obj_norm", norm_surface_col("obj"))
-            .join(
-                F.broadcast(
-                    alias_to_entity.select(
-                        F.col("alias_norm").alias("obj_norm"),
-                        F.col("_eid").alias("obj_entity"),
-                    )
-                ),
-                "obj_norm",
-                "left",
-            )
-            .select(
-                "subj", "pred", "obj", "url", "conf",
-                "subj_entity", "obj_entity", "url_hash_bucket",
-            )
-        )
-        g.write.partitionBy("pred", "url_hash_bucket").mode("overwrite").parquet(
-            f"{args.out}/graph"
-        )
+        save("graph", g.select(
+            "subj", "pred", "obj", "url", "conf",
+            "subj_entity", "obj_entity", "url_hash_bucket",
+        ), "pred", "url_hash_bucket")
 
     if "facts" in stages:
         # fact materialization + reasoning over the graph table: facts
@@ -422,7 +429,7 @@ def main(argv=None) -> int:
         from kg.graphstats import fact_evidence
         from kg.reason import induce_entity_types, infer_transitive
 
-        g = spark.read.parquet(f"{args.out}/graph")
+        g = read("graph", "facts")
         linked_g = g.select(
             "url",
             "subj",
@@ -435,27 +442,17 @@ def main(argv=None) -> int:
         # partition the standing fact table by predicate: per-pred scans
         # (closure, conflict resolution, per-relation exports) prune at
         # the directory level instead of reading the whole store.
-        # STATIC overwrite (the checkpoint pipeline sets the session to
-        # dynamic): this is a full recompute, so the whole table must be
-        # replaced — dynamic mode would leave partitions of predicates
-        # absent from this run (and any pre-partitioning flat files).
-        fact_evidence(with_ts).write.partitionBy("pred").option(
-            "partitionOverwriteMode", "static"
-        ).mode("overwrite").parquet(f"{args.out}/facts")
+        save("facts", fact_evidence(with_ts), "pred")
         full = linked_g.where(
             F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
         )
-        infer_transitive(full, pred="located_in", max_depth=3).write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/facts_inferred")
+        save("facts_inferred", infer_transitive(full, pred="located_in", max_depth=3))
         from kg.reason import DEFAULT_TYPE_RULES
 
         rules = spark.createDataFrame(
             DEFAULT_TYPE_RULES, "pred string, role string, etype string"
         )
-        induce_entity_types(linked_g, rules).write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/entity_types")
+        save("entity_types", induce_entity_types(linked_g, rules))
 
     if "kgtrain" in stages:
         # KG-embedding training exports off the graph table (opt-in, all
@@ -472,7 +469,7 @@ def main(argv=None) -> int:
 
         from kg.ops.ids import assign_dense_ids
 
-        g = spark.read.parquet(f"{args.out}/graph")
+        g = read("graph", "kgtrain")
         raw_ids = g.select(
             F.col("subj_entity").alias("subj_id"),
             "pred",
@@ -485,17 +482,14 @@ def main(argv=None) -> int:
         # rows, and the walk-id scheme (node * walks_per_node + i)
         # requires small nonnegative ids — canonical entity ids can be
         # hash-sized. The mapping table is an export of its own.
-        id_map = assign_dense_ids(
+        save("train_entity_ids", assign_dense_ids(
             raw_ids.select(F.col("subj_id").alias("entity_id"))
             .union(raw_ids.select(F.col("obj_id").alias("entity_id")))
             .distinct(),
             key_cols=["entity_id"],
             id_name="node_id",
-        )
-        id_map.write.mode("overwrite").parquet(
-            f"{args.out}/train_entity_ids"
-        )
-        id_map = spark.read.parquet(f"{args.out}/train_entity_ids")
+        ))
+        id_map = read("train_entity_ids", "kgtrain")
         linked_ids = (
             raw_ids.join(
                 id_map.select(
@@ -517,28 +511,23 @@ def main(argv=None) -> int:
                 F.col("_o").alias("obj_id"),
             )
         )
-        negative_sample_triples(linked_ids, k=4).write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/train_negatives")
+        save("train_negatives", negative_sample_triples(linked_ids, k=4))
         edges = linked_ids.select(
             F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
         )
-        walks = node2vec_walks(
+        save("train_walks", node2vec_walks(
             edges, walk_len=8, walks_per_node=2, ret_w=1, in_w=4, out_w=2
-        )
-        walks.write.mode("overwrite").parquet(f"{args.out}/train_walks")
-        walks_back = spark.read.parquet(f"{args.out}/train_walks")
-        walk_skipgrams(walks_back, window=2).write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/train_skipgrams")
-        sgns_unigram_table(
-            walk_node_counts(walks_back), table_size=1 << 16
-        ).write.mode("overwrite").parquet(f"{args.out}/sgns_table")
+        ))
+        walks = read("train_walks", "kgtrain")
+        save("train_skipgrams", walk_skipgrams(walks, window=2))
+        save("sgns_table", sgns_unigram_table(
+            walk_node_counts(walks), table_size=1 << 16
+        ))
 
     if "analytics" in stages:
         from kg.graphstats import degree_stats, pagerank, triangle_stats
 
-        g = spark.read.parquet(f"{args.out}/graph")
+        g = read("graph", "analytics")
         # node id = canonical entity where linked, else the surface hash
         # (entity ids are small ints, xxhash64 spans the full 64-bit
         # space — overlap is negligible and only perturbs analytics, not
@@ -552,7 +541,7 @@ def main(argv=None) -> int:
             ("degrees", degree_stats(edges)),
             ("triangles", triangle_stats(edges)),
         ):
-            df.write.mode("overwrite").parquet(f"{args.out}/analytics_{name}")
+            save(f"analytics_{name}", df)
 
     wall = time.monotonic() - t_start
     n_pages = pages.count()

@@ -145,3 +145,35 @@ def test_compact_stage_preserves_content_and_lineage(spark, pages_sdf,
     assert _rows(pipe.run_stage("mentions", bucketed, fn)) == before
     # idempotent: compacting twice is safe
     assert pipe.compact_stage("mentions") == files_after
+
+
+def test_stage_names_are_checked():
+    import run_pipeline
+
+    base = ["--pages", "p.parquet", "--out", "o"]
+    default = run_pipeline.parse_args(base).stages
+    assert default == set(run_pipeline.STAGES) - set(run_pipeline.OPT_IN)
+    assert len(default) == 9
+    args = run_pipeline.parse_args([*base, "--stages", "extract, links ,canon"])
+    assert args.stages == {"extract", "links", "canon"}
+    for bad in ("extract,linkz", "extract,,links"):
+        with pytest.raises(SystemExit):
+            run_pipeline.parse_args([*base, "--stages", bad])
+
+
+def test_config_hash_covers_output_options():
+    import run_pipeline
+    from kg.checkpoint import config_hash
+
+    base = ["--pages", "p.parquet", "--out", "o"]
+
+    def cfg(*extra):
+        return config_hash(run_pipeline.run_config(
+            run_pipeline.parse_args([*base, *extra])
+        ))
+
+    plain = cfg()
+    assert plain == cfg("--stages", "canon")
+    for extra in (["--markup"], ["--coref"], ["--alias-dict", "a.parquet"],
+                  ["--n-salts", "8"], ["--salted-linking"]):
+        assert cfg(*extra) != plain, extra

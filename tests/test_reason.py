@@ -350,19 +350,26 @@ class TestRewritePronounTriples:
 
 
 class TestFactsPipelineStage:
-    def test_run_pipeline_facts_and_coref(self, spark, tmp_path):
-        """run_pipeline with the facts stage writes a pred-partitioned
-        fact table + closure + entity types; --coref leaves the link
-        output unchanged on a pronoun-free corpus (pass-through safety)."""
+    ARGS = ["--pages", "fixtures/pages_tiny.parquet", "--buckets", "4",
+            "--coref"]
+
+    @pytest.fixture(scope="class")
+    def finished_out(self, spark, tmp_path_factory):
         import run_pipeline
 
-        out = str(tmp_path / "kg_out")
+        out = str(tmp_path_factory.mktemp("facts") / "kg_out")
         rc = run_pipeline.main([
-            "--pages", "/root/repo/fixtures/pages_tiny.parquet",
-            "--out", out, "--buckets", "4", "--coref",
+            *self.ARGS, "--out", out,
             "--stages", "extract,triples,link,canon,graph,facts",
         ])
         assert rc == 0
+        return out
+
+    def test_run_pipeline_facts_and_coref(self, spark, finished_out):
+        """run_pipeline with the facts stage writes a pred-partitioned
+        fact table + closure + entity types; --coref leaves the link
+        output unchanged on a pronoun-free corpus (pass-through safety)."""
+        out = finished_out
         facts = spark.read.parquet(f"{out}/facts")
         assert facts.count() > 0
         # pred is a PARTITION column (directory-level pruning at rest)
@@ -383,6 +390,48 @@ class TestFactsPipelineStage:
             "/root/repo/fixtures/expected_triples_tiny.parquet"
         )
         assert linked.count() == golden.count()
+
+    def test_partial_reruns_read_inputs_from_out(self, spark, finished_out):
+        """canon alone reads linked from --out and rewrites the same
+        entities; graph alone replaces the whole table, so a partition
+        no longer produced does not survive the rerun."""
+        import os
+
+        import run_pipeline
+
+        out = finished_out
+
+        def rows(table):
+            return sorted(
+                repr(sorted(r.asDict().items(), key=lambda kv: kv[0]))
+                for r in spark.read.parquet(f"{out}/{table}").collect()
+            )
+
+        canon = rows("entities_canonical")
+        rc = run_pipeline.main([*self.ARGS, "--out", out, "--stages", "canon"])
+        assert rc == 0
+        assert rows("entities_canonical") == canon
+
+        n_graph = spark.read.parquet(f"{out}/graph").count()
+        stale = f"{out}/graph/pred=zz_stale/url_hash_bucket=0"
+        spark.read.parquet(f"{out}/graph").limit(1).drop(
+            "pred", "url_hash_bucket"
+        ).write.parquet(stale)
+        assert spark.read.parquet(f"{out}/graph").count() == n_graph + 1
+        rc = run_pipeline.main([*self.ARGS, "--out", out, "--stages", "graph"])
+        assert rc == 0
+        assert not os.path.exists(f"{out}/graph/pred=zz_stale")
+        assert spark.read.parquet(f"{out}/graph").count() == n_graph
+
+    def test_graph_on_empty_out_names_missing_input(self, spark, tmp_path):
+        import run_pipeline
+
+        out = tmp_path / "kg_out"
+        with pytest.raises(SystemExit) as exc:
+            run_pipeline.main([*self.ARGS, "--out", str(out), "--stages", "graph"])
+        assert "'entities_canonical'" in str(exc.value.code)
+        assert "'graph'" in str(exc.value.code)
+        assert not out.exists() or not any(out.iterdir())
 
 
 class TestRdfsEntailment:

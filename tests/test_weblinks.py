@@ -144,6 +144,21 @@ class TestLinksPipelineStage:
         assert rc2 == 0
         assert spark.read.parquet(f"{out}/links").count() == want.count()
 
+    def test_links_alone_on_fresh_out(self, spark, tmp_path):
+        """links reads only the pages: it runs without a docs table."""
+        import run_pipeline
+
+        out = str(tmp_path / "kgout_links")
+        rc = run_pipeline.main([
+            "--pages", "fixtures/pages_tiny.parquet", "--out", out,
+            "--buckets", "4", "--stages", "links",
+        ])
+        assert rc == 0
+        assert not (tmp_path / "kgout_links" / "docs").exists()
+        for table in ("links", "link_host_graph", "crawl_frontier",
+                      "url_templates"):
+            assert spark.read.parquet(f"{out}/{table}").count() > 0
+
     def test_robots_gate_and_url_templates_rollup(self, spark, tmp_path):
         import run_pipeline
         from kg.ops.weblinks import extract_links
