@@ -3580,11 +3580,11 @@ def _profile_oracle_sql() -> str:
         return f"""
   SELECT '{col}' AS "column", 'bigint' AS dtype,
     count(*) AS n_rows,
-    sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS n_nulls,
+    CAST(sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
     count(DISTINCT {v}) AS n_distinct,
     min({v}) AS min_int,
     max({v}) AS max_int,
-    sum({v}) AS sum_int,
+    CAST(sum({v}) AS BIGINT) AS sum_int,
     CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
     CAST(NULL AS DOUBLE) AS mean_num,
     CAST(NULL AS BIGINT) AS min_len, CAST(NULL AS BIGINT) AS max_len,
@@ -3595,7 +3595,7 @@ def _profile_oracle_sql() -> str:
         return f"""
   SELECT '{col}' AS "column", 'string' AS dtype,
     count(*) AS n_rows,
-    sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS n_nulls,
+    CAST(sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
     count(DISTINCT {col}) AS n_distinct,
     CAST(NULL AS BIGINT) AS min_int, CAST(NULL AS BIGINT) AS max_int,
     CAST(NULL AS BIGINT) AS sum_int,

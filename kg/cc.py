@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kg.session import materialize
+from kg.session import local_df, materialize
 
 __all__ = ["connected_components", "incremental_components"]
 
@@ -90,7 +90,7 @@ def _local_cc(spark, pairs) -> DataFrame:
             lo, hi = min(ra, rb), max(ra, rb)
             parent[hi] = lo
     rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node long, component long")
+    return local_df(spark, rows, "node long, component long")
 
 
 def connected_components(
@@ -113,10 +113,6 @@ def connected_components(
     so the iterative algorithm keeps its own oracle coverage).
     """
     current = materialize(_symmetrize(edges))
-    if current.isEmpty():
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "node long, component long")
-
     n_current = current.count()
     if n_current <= local_threshold:
         return _local_cc(

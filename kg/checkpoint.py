@@ -28,6 +28,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg.session import local_df
+
 __all__ = ["add_bucket", "CheckpointedPipeline"]
 
 # Per-bucket commit log. Wall time deliberately lives ONLY in the metrics
@@ -94,13 +96,18 @@ class CheckpointedPipeline:
     def _lineage_path(self) -> str:
         return str(self.base / "_lineage")
 
+    def _has_lineage(self) -> bool:
+        return any(Path(self._lineage_path()).glob("*.parquet"))
+
     def read_lineage(self) -> DataFrame:
-        p = Path(self._lineage_path())
-        if not p.exists() or not any(p.glob("*.parquet")):
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(str(p))
+        if not self._has_lineage():
+            return local_df(self.spark, [], LINEAGE_SCHEMA)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage_path())
 
     def completed_buckets(self, stage: str) -> set[int]:
+        if not self._has_lineage():
+            # fresh base: nothing is committed, so no job is needed to say so
+            return set()
         rows = (
             self.read_lineage()
             .where(
@@ -229,7 +236,7 @@ class CheckpointedPipeline:
             )
             for b in todo_buckets
         ]
-        self.spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+        local_df(self.spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self._lineage_path())
 
@@ -244,7 +251,7 @@ class CheckpointedPipeline:
                 now,
             )
         ]
-        self.spark.createDataFrame(metrics_rows, METRICS_SCHEMA).coalesce(1).write.mode(
+        local_df(self.spark, metrics_rows, METRICS_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(str(self.base / "_metrics"))
         return self.read_stage(stage)
@@ -318,7 +325,7 @@ class CheckpointedPipeline:
         if not p.exists() or not any(p.glob("*.parquet")):
             from kg.errors import ERRORS_SCHEMA
 
-            return self.spark.createDataFrame([], ERRORS_SCHEMA)
+            return local_df(self.spark, [], ERRORS_SCHEMA)
         return self.spark.read.parquet(str(p)).distinct()
 
     def _probe_peak_mem(self, written: DataFrame) -> float:

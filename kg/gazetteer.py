@@ -20,6 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg.session import local_df
 from kg.stages.mentions import detect_mentions, gazetteer_dim
 
 __all__ = ["GazetteerSnapshots"]
@@ -55,8 +56,10 @@ class GazetteerSnapshots:
         """Dim DataFrame at ``version`` (default: latest). Version 0 = empty."""
         v = self.latest_version() if version is None else version
         if v == 0:
-            return self.spark.createDataFrame(
-                [], "entity_name string, value string, value_norm string, n_words int"
+            return local_df(
+                self.spark,
+                [],
+                "entity_name string, value string, value_norm string, n_words int",
             )
         return self.spark.read.parquet(str(self.base / f"v{v}"))
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kg.session import materialize
+from kg.session import local_df, materialize
 
 __all__ = [
     "pagerank",
@@ -182,7 +182,7 @@ def personalized_pagerank(
     """
     spark = edges.sparkSession
     if not isinstance(seeds, DataFrame):
-        seeds = spark.createDataFrame([(int(s),) for s in seeds], "node long")
+        seeds = local_df(spark, [(int(s),) for s in seeds], "node long")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = materialize(
         e.select(F.col("src").alias("node"))
@@ -635,9 +635,7 @@ def _local_scc(spark, pairs) -> DataFrame:
     rows = [
         (int(n), int(min(comp)), True) for comp in sccs for n in comp
     ]
-    return spark.createDataFrame(
-        rows, "node long, scc long, resolved boolean"
-    )
+    return local_df(spark, rows, "node long, scc long, resolved boolean")
 
 
 def _min_label_fixpoint(
@@ -723,7 +721,7 @@ def strongly_connected_components(
         .distinct()
     )
     all_nodes = nodes
-    assigned = spark.createDataFrame([], "node long, scc long")
+    assigned = local_df(spark, [], "node long, scc long")
     for _ in range(max_rounds):
         if nodes.isEmpty():
             break
@@ -905,9 +903,7 @@ def khop_reachability(
     """
     spark = edges.sparkSession
     if not isinstance(seeds, DataFrame):
-        seeds = spark.createDataFrame(
-            [(int(s),) for s in seeds], "node long"
-        )
+        seeds = local_df(spark, [(int(s),) for s in seeds], "node long")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not directed:
         e = e.union(
@@ -1073,7 +1069,7 @@ def shortest_paths(
     """
     spark = edges.sparkSession
     if not isinstance(seeds, DataFrame):
-        seeds = spark.createDataFrame([(int(s),) for s in seeds], "node long")
+        seeds = local_df(spark, [(int(s),) for s in seeds], "node long")
     wt = (
         F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     ).alias("wt")
@@ -1677,8 +1673,10 @@ def neighborhood_function(
             else:
                 n_nodes, total = _round_total(counters)
         out.append((r, n_nodes, float(total), float(total) / n_nodes))
-    return edges.sparkSession.createDataFrame(
-        out, "r INT, n_nodes LONG, est_pairs DOUBLE, avg_ball DOUBLE"
+    return local_df(
+        edges.sparkSession,
+        out,
+        "r INT, n_nodes LONG, est_pairs DOUBLE, avg_ball DOUBLE",
     )
 
 

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kg.session import local_df
+
 __all__ = [
     "isotonic_calibrate",
     "isotonic_apply",
@@ -974,9 +976,7 @@ def isotonic_apply(
             current = rows[j][1]
             j += 1
         dense.append((b, current))
-    lookup = scored.sparkSession.createDataFrame(
-        dense, "bin int, _fit double"
-    )
+    lookup = local_df(scored.sparkSession, dense, "bin int, _fit double")
     b = F.least(
         F.lit(int(n_bins) - 1),
         F.floor(F.col(score_col) * int(n_bins)).cast("int"),

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kg.cc import connected_components
-from kg.session import materialize
+from kg.session import local_df, materialize
 
 
 #: rotation step per gram position for the word-hash gram key (coprime
@@ -1129,7 +1129,8 @@ def soft_dedup_weights(
     ``clusters``: (id, cluster) assignment — e.g. minhash_near_dup's
     (doc_id, component) or cdc/simhash clusters; default is EXACT
     clusters (md5 of whitespace/case-normalized text, the exact_dedup
-    key). Docs absent from a supplied ``clusters`` are singletons.
+    key). Docs absent from a supplied ``clusters`` are singletons; a doc
+    listed more than once takes its smallest cluster id.
     Returns one row per doc (TOTAL verdict table):
     (id, cluster, cluster_size, weight) with weight = 1/cluster_size
     (one exact-BIGINT count, one float division — the hash-class-C
@@ -1146,8 +1147,12 @@ def soft_dedup_weights(
             F.col(id_col), F.md5(_norm_text()).alias(cluster_col)
         )
     else:
+        # one row per id first: a duplicated id would fan out the join
+        assignment = clusters.groupBy(id_col).agg(
+            F.min(cluster_col).alias(cluster_col)
+        )
         clusters = docs.select(id_col).join(
-            clusters.select(id_col, cluster_col), id_col, "left"
+            assignment, id_col, "left"
         ).select(
             id_col,
             # singleton fallback: docs outside the assignment cluster
@@ -1607,7 +1612,8 @@ def blocking_eval(
     pc = 1.0 if n_true == 0 else n_cap / n_true
     rr = 1.0 if total_pairs == 0 else 1.0 - n_cand / total_pairs
     spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(n_docs, n_true, n_cand, n_cap, round(pc, 6), round(rr, 6))],
         "n_docs long, n_true_pairs long, n_candidate_pairs long, "
         "n_captured long, pair_completeness double, reduction_ratio double",
@@ -1668,7 +1674,8 @@ def cluster_agreement(
     denom = (pa + pb) / 2.0 - exp
     ari = (tp - exp) / denom if denom else 1.0
     spark = a.sparkSession
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(
             n, int(tp), int(pa), int(pb),
             round(prec, 6), round(rec, 6), round(f1, 6), round(ari, 6),

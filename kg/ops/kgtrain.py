@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kg.session import materialize
+from kg.session import local_df, materialize
 
 __all__ = [
     "negative_sample_triples",
@@ -95,7 +95,8 @@ def _contiguous_rank(df: DataFrame, col: str = "entity_id") -> DataFrame:
         offsets[pid] = acc
         acc += cnt
     off_df = F.broadcast(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [(pid, off) for pid, off in offsets.items()],
             "_pid int, _off long",
         )
@@ -310,9 +311,7 @@ def verbalize_facts(
     """
     spark = facts.sparkSession
     if templates is None:
-        templates = spark.createDataFrame(
-            DEFAULT_TEMPLATES, "pred string, template string"
-        )
+        templates = local_df(spark, DEFAULT_TEMPLATES, "pred string, template string")
     tdim = F.broadcast(
         templates.select(F.col("pred").alias(pred_col), "template")
     )
@@ -560,7 +559,7 @@ def _partitioned_cumsum(
         offsets.append((pid, acc))
         acc += int(s)
     off_df = F.broadcast(
-        df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
+        local_df(df.sparkSession, offsets, "_pid int, _off long")
     )
     local = F.sum(val).over(
         Window.partitionBy("_pid")

@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kg.session import local_df
+
 __all__ = [
     "UNK",
     "lm_vocab",
@@ -237,7 +239,7 @@ def nb_train(
     label_tot = counts.groupBy("label").agg(F.sum("_c").alias("_tot"))
 
     v_plus = vocab.count() + 1
-    vocab_u = vocab.union(vocab.sparkSession.createDataFrame([(UNK,)], ["word"]))
+    vocab_u = vocab.union(local_df(vocab.sparkSession, [(UNK,)], "word string"))
     dense = (
         # broadcast the label side: the dim x dim cross must never plan as
         # a shuffle CartesianProduct, whatever size the vocab dim reaches

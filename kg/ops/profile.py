@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from kg.session import local_df
+
 __all__ = ["profile_table", "profile_diff", "skew_report",
            "numeric_correlations", "categorical_mi",
            "column_histogram"]
@@ -269,7 +271,8 @@ def skew_report(
     ).withColumn(
         "share", F.round(F.col("n_rows") / F.lit(float(stats.n_total)), 6)
     )
-    total = spark.createDataFrame(
+    total = local_df(
+        spark,
         [(
             "__total__", int(stats.n_total), 1.0, 0,
         )],
@@ -317,9 +320,7 @@ def numeric_correlations(
                 (a, b, round(float(v), 6) if v is not None else None,
                  int(row["__n"]))
             )
-    return spark.createDataFrame(
-        out, "col_a string, col_b string, corr double, n long"
-    )
+    return local_df(spark, out, "col_a string, col_b string, corr double, n long")
 
 
 def categorical_mi(
@@ -419,9 +420,7 @@ def column_histogram(
         F.count(c).alias("n"),
     ).first()
     if mm.n == 0:
-        return df.sparkSession.createDataFrame(
-            [], "bin long, lo double, hi double, n long"
-        )
+        return local_df(df.sparkSession, [], "bin long, lo double, hi double, n long")
     lo, hi = float(mm.lo), float(mm.hi)
     width = (hi - lo) / n_bins if hi > lo else 1.0
     bin_idx = F.least(

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kg.session import local_df, materialize
+
 __all__ = [
     "cosine_topk_bruteforce",
     "mmr_topk",
@@ -217,8 +219,6 @@ def cosine_band_candidates(
     # the Arrow projection UDF runs three times (same pattern as the
     # MinHash bucket table in kg/ops/dedup.py); reliable when a checkpoint
     # dir is set (kg.session.materialize)
-    from kg.session import materialize
-
     bands = materialize(bands)
     sizes = bands.groupBy("band", "key").agg(F.count("*").alias("n"))
     kept = bands.join(
@@ -351,7 +351,8 @@ def _ivf_fit(
     ).fit(feats)
     assigned = model.transform(feats).select("vid", "unit", "list_id")
     spark = embeddings.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_df(
+        spark,
         [(i, [float(x) for x in c])
          for i, c in enumerate(model.clusterCenters())],
         "probe_list int, centroid array<double>",
@@ -654,7 +655,8 @@ def lloyd_kmeans(
         hashed.orderBy("_h", "vid").limit(int(k)).select("unit").collect()
     )
     spark = embeddings.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_df(
+        spark,
         [(i, list(r.unit)) for i, r in enumerate(init_rows)],
         "probe_list int, centroid array<double>",
     )
@@ -710,9 +712,7 @@ def lloyd_kmeans(
                 next_cents.append(
                     (r.probe_list, [x / nrm for x in m])
                 )
-        cents = spark.createDataFrame(
-            next_cents, "probe_list int, centroid array<double>"
-        )
+        cents = local_df(spark, next_cents, "probe_list int, centroid array<double>")
     final = _assign(cents)
     return final.select("vid", "unit", "list_id"), cents
 
@@ -792,7 +792,6 @@ def semdedup(
     feeds kg/cc.py's large-star/small-star path via
     local_threshold=0)."""
     from kg.cc import connected_components
-    from kg.session import materialize
 
     assigned, _ = lloyd_kmeans(
         embeddings, k=k, rounds=rounds, seed=seed,
@@ -1031,7 +1030,8 @@ def pq_train(
         ).cast("long").alias("_h"),
     )
     init_rows = hashed.orderBy("_h", "vid").limit(int(k)).select("_e").collect()
-    cents = spark.createDataFrame(
+    cents = local_df(
+        spark,
         [
             (s, j, list(r._e[s * dsub : (s + 1) * dsub]))
             for s in range(m_sub)
@@ -1068,7 +1068,8 @@ def pq_train(
             )
         )
         new = {(r.sub, r.code): list(r.mean) for r in means.collect()}
-        cents = spark.createDataFrame(
+        cents = local_df(
+            spark,
             [
                 (r.sub, r.code, new.get((r.sub, r.code), list(r.centroid)))
                 for r in cents.collect()
@@ -1324,8 +1325,6 @@ def mmr_topk(
         .limit(int(n_candidates))
         .select("cid", "cvec", "cnorm", "rel")
     )
-    from kg.session import materialize
-
     cands = materialize(cands)
     spark = embeddings.sparkSession
     picked: list[tuple] = []
@@ -1369,8 +1368,8 @@ def mmr_topk(
             (rank, int(best["cid"]), round(float(best["rel"]), 6),
              round(float(score), 6))
         )
-    return spark.createDataFrame(
-        picked, "rank INT, vec_id LONG, relevance DOUBLE, mmr_score DOUBLE"
+    return local_df(
+        spark, picked, "rank INT, vec_id LONG, relevance DOUBLE, mmr_score DOUBLE"
     )
 
 

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kg.session import local_df, materialize
+
 __all__ = ["subword_vocab", "subword_tokenize", "bpe_merges", "bpe_tokenize"]
 
 _KIND_PRIORITY = {"word": 0, "trigram": 1, "bigram": 2, "char": 3}
@@ -154,8 +156,6 @@ def subword_tokenize(
     if pieces is None and vocab is None:
         # share ONE corpus token pass between the vocab build and the
         # distinct-word dim (occ already is the dim + counts)
-        from kg.session import materialize
-
         occ = materialize(_occurrences(docs, text_col))
         vocab = _vocab_from_occ(
             occ,
@@ -303,8 +303,6 @@ def bpe_merges(
     production 32k-merge run keeps the same corpus cost (one pass) and
     pays n_merges dim-sized rounds — the known MapReduce-BPE shape.
     """
-    from kg.session import materialize
-
     occ = _occurrences(docs, text_col)
     w = materialize(
         occ.select("n", _initial_symbols(F.col("word")).alias("syms"))
@@ -337,8 +335,8 @@ def bpe_merges(
         w = materialize(
             w.select("n", _merge_pair(F.col("syms"), a, b).alias("syms"))
         )
-    return spark.createDataFrame(
-        rules, "rank INT, left STRING, right STRING, merged STRING, n LONG"
+    return local_df(
+        spark, rules, "rank INT, left STRING, right STRING, merged STRING, n LONG"
     )
 
 

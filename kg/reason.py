@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kg.session import materialize
+from kg.session import local_df, materialize
 
 __all__ = [
     "DEFAULT_TYPE_RULES",
@@ -651,7 +651,7 @@ def rdfs_extend_facts(
         "rule", F.lit("asserted")
     )
     if sub:
-        sup_dim = spark.createDataFrame(sub, "pred string, sup string")
+        sup_dim = local_df(spark, sub, "pred string, sup string")
         derived = (
             facts.join(F.broadcast(sup_dim), "pred")
             .select(
@@ -688,16 +688,14 @@ def rdfs_types(
     sig = [(s, "subj", o) for s, p, o in rows if p == "domain"]
     sig += [(s, "obj", o) for s, p, o in rows if p == "range"]
     if not sig:
-        return spark.createDataFrame([], "entity_id long, etype string")
-    sig_dim = spark.createDataFrame(
-        sig, "pred string, role string, etype string"
-    )
+        return local_df(spark, [], "entity_id long, etype string")
+    sig_dim = local_df(spark, sig, "pred string, role string, etype string")
     classes = {c for s, p, o in rows for c in (s, o)
                if p == "subclass_of"} | {t for _, _, t in sig}
     up = _transitive_pairs(
         [(s, o) for s, p, o in rows if p == "subclass_of"]
     ) + [(c, c) for c in sorted(classes)]
-    up_dim = spark.createDataFrame(up, "etype string, sup string")
+    up_dim = local_df(spark, up, "etype string, sup string")
     base = (
         ext.join(F.broadcast(sig_dim), "pred")
         .select(

@@ -9,15 +9,42 @@ the same plan-relevant settings:
   Python UDFs; mapInPandas/pandas_udf only).
 - shuffle partitions sized for the local harness; a real cluster run passes
   its own value (≈ 2-3x total cores) via spark-submit --conf.
+- driver-side rows (lineage/metrics commits, gazetteer and regex dims,
+  union-find output, rule tables) become DataFrames only through
+  :func:`local_df`. ``createDataFrame(<python list>, ddl)`` pickles the rows
+  into a ``parallelize`` RDD, so every job that scans the result starts a
+  Python worker; ``local_df`` ships them as one Arrow table and the JVM
+  scans a ``LocalRelation`` with no Python worker at all.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+
+def local_df(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``ddl`` column order),
+    scanned by the JVM as a ``LocalRelation``.
+
+    The rows go straight into a ``pyarrow.Table`` typed from the DDL, not
+    through pandas, so longs above 2^53 and NULLs in integer columns keep
+    their values. Independent of ``spark.sql.execution.arrow.pyspark.enabled``.
+    Unlike an RDD scan, the relation has exact size statistics, so Catalyst
+    broadcasts it into joins on its own when it is small.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    arrow_type = pa.struct(list(to_arrow_schema(struct)))
+    table = pa.Table.from_struct_array(pa.array(list(rows), type=arrow_type))
+    return spark.createDataFrame(table, struct)
 
 
 def materialize(df: DataFrame) -> DataFrame:

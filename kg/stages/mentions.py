@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from kg.normalize import PUNCT
 from kg.oracle import BadRegexError
+from kg.session import local_df
 
 MENTIONS_SCHEMA = "url string, matched_word string, entity_name string, detector string"
 
@@ -87,7 +88,7 @@ def gazetteer_dim(spark: SparkSession, entities: dict[str, list[str]]) -> DataFr
     (entity_name, value, value_norm). Normal form = lower then strip-punct
     ends, matching kg.normalize.norm_value."""
     rows = [(n, v) for n, values in entities.items() for v in values]
-    df = spark.createDataFrame(rows, "entity_name string, value string")
+    df = local_df(spark, rows, "entity_name string, value string")
     return df.select(
         "entity_name",
         "value",
@@ -109,9 +110,7 @@ def regex_dim(spark: SparkSession, regex_entities: dict[str, str]) -> DataFrame:
 
 
 def regex_dim_from_df_rows(spark, rows):  # noqa: ANN001
-    if not rows:
-        return spark.createDataFrame([], "entity_name string, pattern string")
-    return spark.createDataFrame(rows, "entity_name string, pattern string")
+    return local_df(spark, rows, "entity_name string, pattern string")
 
 
 def _words_col(text: str | Column = "text") -> Column:
@@ -225,10 +224,12 @@ def detect_gazetteer_mentions(
     """Value-entity pass. Returns (winners, matched_surfaces).
 
     ``broadcast_dim=False`` is the huge-dictionary regime: the dim join is
-    left to Catalyst/AQE (shuffled hash or sort-merge with skew-join
-    splitting) instead of forcing a broadcast that would not fit. The
-    planning aggregation is already bounded either way
-    (_dim_planning_inputs), so nothing else changes.
+    a sort-merge join (with AQE skew-join splitting) instead of a
+    broadcast that would not fit. It is hinted, because a dim built on
+    the driver carries exact size statistics and Catalyst would
+    otherwise broadcast any dim that looks small. The planning
+    aggregation is already bounded either way (_dim_planning_inputs), so
+    nothing else changes.
 
     ``plan``: precomputed :class:`GazetteerPlan` (plan_gazetteer) — skips
     the per-call planning aggregation; per-job state on a real cluster.
@@ -282,7 +283,7 @@ def detect_gazetteer_mentions(
 
     dim = gazetteer.select(F.col("value_norm").alias("key"), "entity_name")
     joined = normalized.join(
-        F.broadcast(dim) if broadcast_dim else dim, "key"
+        F.broadcast(dim) if broadcast_dim else dim.hint("merge"), "key"
     )
 
     # first occurrence per distinct candidate, then longest-match fold:
@@ -348,8 +349,10 @@ def detect_regex_mentions(
         else regexes.select("entity_name", "pattern").collect()
     )
     if not pats:
-        return docs.sparkSession.createDataFrame(
-            [], f"{id_col} string, matched_word string, entity_name string"
+        return local_df(
+            docs.sparkSession,
+            [],
+            f"{id_col} string, matched_word string, entity_name string",
         )
     words = docs.select(id_col, F.explode(_words_col("text")).alias("word"))
     stripped = words.withColumn("matched_word", F.btrim(F.col("word"), F.lit(PUNCT)))

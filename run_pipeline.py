@@ -448,9 +448,10 @@ def main(argv=None) -> int:
         )
         save("facts_inferred", infer_transitive(full, pred="located_in", max_depth=3))
         from kg.reason import DEFAULT_TYPE_RULES
+        from kg.session import local_df
 
-        rules = spark.createDataFrame(
-            DEFAULT_TYPE_RULES, "pred string, role string, etype string"
+        rules = local_df(
+            spark, DEFAULT_TYPE_RULES, "pred string, role string, etype string"
         )
         save("entity_types", induce_entity_types(linked_g, rules))
 

@@ -85,6 +85,18 @@ def test_config_change_invalidates_checkpoints(spark, pages_sdf, tmp_path):
     assert pipe_b.completed_buckets("mentions") == set()
 
 
+def test_fresh_base_skip_check_starts_no_job(spark, tmp_path):
+    pipe = CheckpointedPipeline(spark, str(tmp_path / "fresh"), n_buckets=8)
+    sc = spark.sparkContext
+    group = "fresh-skip-check"
+    sc.setJobGroup(group, "completed_buckets on a fresh base")
+    try:
+        assert pipe.completed_buckets("mentions") == set()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_lineage_and_metrics_written(spark, pages_sdf, tmp_path):
     base = str(tmp_path / "lin")
     gaz = gazetteer_dim(spark, synth.GAZETTEER_DATA)

@@ -970,6 +970,24 @@ class TestSoftDedupWeights:
         assert out[4].cluster_size == 1 and out[4].weight == 1.0
         assert out[4].cluster != out[3].cluster
 
+    def test_duplicated_id_in_clusters_keeps_one_row_per_doc(self, spark):
+        from kg.ops.dedup import soft_dedup_weights
+
+        docs = spark.createDataFrame(
+            [(i, f"t{i}") for i in range(5)], "doc_id long, text string"
+        )
+        rows = [(0, 7), (1, 7), (2, 7), (3, 9)]
+        clusters = spark.createDataFrame(rows, "doc_id long, cluster long")
+        dup = spark.createDataFrame(
+            rows + [(1, 7), (2, 9)], "doc_id long, cluster long"
+        )
+        base = {r.doc_id: r.weight for r in
+                soft_dedup_weights(docs, clusters=clusters).collect()}
+        got = soft_dedup_weights(docs, clusters=dup).collect()
+        assert sorted(r.doc_id for r in got) == list(range(5))
+        # doc 2 keeps its smallest cluster id, so nothing moves
+        assert {r.doc_id: r.weight for r in got} == base
+
     def test_partition_invariant(self, spark, documents):
         from kg.ops.dedup import soft_dedup_weights
 
