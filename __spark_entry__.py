@@ -9618,7 +9618,8 @@ top AS (
 SELECT per.grp AS source, per.n_docs, per.n_keep,
   per.n_docs - per.n_keep AS n_fail, per.sum_words, per.sum_chars,
   t.top_fail, CAST(coalesce(t.top_fail_n, 0) AS BIGINT) AS top_fail_n
-FROM per LEFT JOIN (SELECT * FROM top WHERE rn = 1) t ON per.grp = t.grp
+FROM per LEFT JOIN (SELECT * FROM top WHERE rn = 1) t
+  ON per.grp IS NOT DISTINCT FROM t.grp
 """
 
 

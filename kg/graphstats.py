@@ -48,7 +48,6 @@ __all__ = [
     "merge_fact_evidence",
     "label_propagation",
     "neighborhood_function",
-    "effective_diameter",
     "modularity",
     "graph_mixing",
     "ktruss",
@@ -1566,7 +1565,7 @@ def neighborhood_function(
     est_pairs is the sum over nodes of the node's estimated ball
     cardinality |B(v, r)| and avg_ball = est_pairs / n_nodes. The
     effective diameter at fraction a is the smallest r with
-    est_pairs(r) >= a * est_pairs(rounds) (:func:`effective_diameter`).
+    est_pairs(r) >= a * est_pairs(rounds).
 
     Determinism/oracle: counters are seedless HLL register tables
     (md5-hashed node ids, kg/ops/sketch.py semantics) held RELATIONALLY
@@ -1678,28 +1677,6 @@ def neighborhood_function(
         out,
         "r INT, n_nodes LONG, est_pairs DOUBLE, avg_ball DOUBLE",
     )
-
-
-def effective_diameter(nf: DataFrame, alpha: float = 0.9) -> float:
-    """Effective diameter from a :func:`neighborhood_function` table:
-    the smallest radius r whose estimated pair count reaches ``alpha``
-    of the final radius's, linearly interpolated between r-1 and r (the
-    standard HyperBall/ANF convention). Driver-side over the <= rounds+1
-    aggregate rows."""
-    rows = sorted(
-        (int(r["r"]), float(r["est_pairs"])) for r in nf.collect()
-    )
-    target = alpha * rows[-1][1]
-    prev_r, prev_v = rows[0]
-    if prev_v >= target:
-        return float(prev_r)
-    for r, v in rows[1:]:
-        if v >= target:
-            if v == prev_v:
-                return float(r)
-            return prev_r + (target - prev_v) / (v - prev_v) * (r - prev_r)
-        prev_r, prev_v = r, v
-    return float(rows[-1][0])
 
 
 def modularity(

@@ -19,8 +19,6 @@ import string
 from collections.abc import Iterator
 
 PUNCT = string.punctuation
-# SQL-escaped version (single quotes doubled) for use inside DuckDB TRIM().
-PUNCT_SQL = PUNCT.replace("'", "''")
 
 
 def strip_punct(s: str) -> str:
@@ -35,11 +33,6 @@ def norm_value(s: str) -> str:
     entity_finder.py:26-28.
     """
     return s.lower().strip(PUNCT)
-
-
-def split_ws(text: str) -> list[str]:
-    """Whitespace-run split with empties dropped (Python str.split())."""
-    return text.split()
 
 
 def ngram_spans(text: str, max_words: int | None = None) -> Iterator[tuple[int, int, str]]:

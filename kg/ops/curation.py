@@ -11,11 +11,7 @@ Scale shapes:
   the (rare) hit rows.
 - token-budget sampling: one shuffle keyed by stratum, a window cumsum in
   hash order inside each stratum. Deterministic under any partitioning
-  (order key is a pure hash of the doc id). For strata so large that a
-  single window partition is a straggler, cut by hash RANGE instead
-  (two-pass: per-stratum token totals, then keep hash < budget/total
-  fraction of the 64-bit space) — approximate budget, no window; that
-  variant is ``token_budget_sample_approx``.
+  (order key is a pure hash of the doc id).
 """
 
 from __future__ import annotations
@@ -24,15 +20,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kg.session import local_df
-
 __all__ = [
     "isotonic_calibrate",
-    "isotonic_apply",
     "quality_prune",
     "benchmark_contamination",
     "token_budget_sample",
-    "token_budget_sample_approx",
     "pack_sequences",
     "chunk_documents",
     "train_val_test_split",
@@ -131,9 +123,7 @@ def token_budget_sample(
     stable across retries/partitionings).
 
     Returns (id, stratum, n_tokens, keep). Tokens = whitespace word count.
-    One shuffle (the window partition by stratum). For web-scale strata
-    where one stratum would bottleneck a single window partition, use
-    ``token_budget_sample_approx`` (hash-range cut, no window).
+    One shuffle (the window partition by stratum).
     """
     stratum = (
         F.col(strata_col) if strata_col else F.lit("all")
@@ -184,8 +174,8 @@ def cap_per_group(
     through their window partition — exactly the domains the cap targets —
     but the state is one running count, and the window sort is bounded by
     the group, not the corpus; for pathological single-host corpora, cap
-    approximately first with a hash-range cut (see
-    ``token_budget_sample_approx``) and run this exact pass on the rest.
+    approximately first with a hash-range cut and run this exact pass on
+    the rest.
     """
     w = Window.partitionBy(group_col).orderBy("_h", id_col)
     return (
@@ -274,43 +264,6 @@ def curate_corpus(
         .when(is_cap_drop, F.col("grp_rank").cast("string"))
         .otherwise(F.lit(""))
         .alias("detail"),
-    )
-
-
-def token_budget_sample_approx(
-    docs: DataFrame,
-    budget_tokens: int,
-    strata_col: str | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 7,
-) -> DataFrame:
-    """Hash-range variant of :func:`token_budget_sample` for strata too
-    large for one window partition: keep docs whose id-hash falls in the
-    leading ``budget/total`` fraction of the hash space. Budget is met in
-    expectation (within one doc's tokens per stratum of variance shrinking
-    as 1/sqrt(n)); no window, no per-stratum serial scan — two shuffles
-    total (the per-stratum totals aggregation joined back by stratum).
-    """
-    stratum = (
-        F.col(strata_col) if strata_col else F.lit("all")
-    ).cast("string").alias("stratum")
-    base = docs.select(
-        F.col(id_col),
-        stratum,
-        F.size(_words(text_col)).cast("long").alias("n_tokens"),
-        F.xxhash64(F.lit(seed), F.col(id_col).cast("string")).alias("_h"),
-    )
-    totals = base.groupBy("stratum").agg(
-        F.sum("n_tokens").alias("_total")
-    )
-    frac = F.least(
-        F.lit(1.0), F.lit(float(budget_tokens)) / F.greatest("_total", F.lit(1))
-    )
-    # map the signed 64-bit hash onto [0, 1) and cut at the budget fraction
-    u = (F.col("_h").cast("double") / F.lit(float(1 << 64))) + F.lit(0.5)
-    return base.join(F.broadcast(totals), "stratum").select(
-        id_col, "stratum", "n_tokens", (u < frac).alias("keep")
     )
 
 
@@ -942,48 +895,4 @@ def isotonic_calibrate(
             ),
             F.round("_fit", 9).alias("fit"),
         )
-    )
-
-
-def isotonic_apply(
-    scored: DataFrame,
-    fit: DataFrame,
-    score_col: str = "score",
-    n_bins: int = 64,
-    out_col: str = "calibrated",
-) -> DataFrame:
-    """Map raw scores through an :func:`isotonic_calibrate` fit: attach
-    ``out_col`` = the fitted P(good) of the score's bin. Bins the fit
-    never saw inherit the nearest OCCUPIED bin at or below them (the
-    step function extends left-constant; scores below the first
-    occupied bin take its value) — monotonicity is preserved by
-    construction.
-
-    Scale shape: the <= n_bins fit rows come to the driver once, the
-    dense bin->fit lookup is rebuilt as a broadcast dim, and the corpus
-    takes ONE broadcast equi-join on the bin expression — a pure map
-    plus the dictionary probe, no shuffle of the scored corpus.
-    """
-    rows = sorted(
-        (int(r["bin"]), float(r["fit"])) for r in fit.select("bin", "fit").collect()
-    )
-    if not rows:
-        raise ValueError("empty isotonic fit")
-    dense, j = [], 0
-    current = rows[0][1]
-    for b in range(int(n_bins)):
-        if j < len(rows) and rows[j][0] == b:
-            current = rows[j][1]
-            j += 1
-        dense.append((b, current))
-    lookup = local_df(scored.sparkSession, dense, "bin int, _fit double")
-    b = F.least(
-        F.lit(int(n_bins) - 1),
-        F.floor(F.col(score_col) * int(n_bins)).cast("int"),
-    )
-    return (
-        scored.withColumn("_b", b)
-        .join(F.broadcast(lookup), F.col("_b") == F.col("bin"), "left")
-        .drop("bin", "_b")
-        .withColumnRenamed("_fit", out_col)
     )

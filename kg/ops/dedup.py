@@ -555,10 +555,6 @@ def minhash_near_dup(
     return membered.join(keep, "component").select("doc_id", "component", "keep_id")
 
 
-# round-1 name for the banded implementation (kept for callers/tests)
-minhash_band_near_dup = minhash_near_dup
-
-
 def minhash_index_build(
     docs: DataFrame, id_col: str = "doc_id", k: int = 64
 ) -> DataFrame:

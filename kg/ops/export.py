@@ -23,9 +23,8 @@ it exactly:
   '%25' last and can never mis-split a token).
 - String literals: the five ECHAR escapes (\\\\, \\", \\n, \\r, \\t).
 
-The module is also the INGEST side: :func:`read_ntriples` /
-:func:`parse_ntriples` parse N-Triples lines back to terms with the
-inverse chains — same pure-projection shape (regexp_extract + replace;
+The module is also the INGEST side: :func:`parse_ntriples` parses
+N-Triples lines back to terms with the inverse chains — same pure-projection shape (regexp_extract + replace;
 no shuffle, no UDF), so parse(serialize(facts)) == facts and an external
 RDF dump loads at scan speed. Literal unescaping routes ``\\\\`` through
 a ``\\x01`` sentinel (a char valid N-Triples lines cannot contain raw)
@@ -43,9 +42,7 @@ __all__ = [
     "iri_unescape",
     "literal_unescape",
     "ntriples",
-    "write_ntriples",
     "parse_ntriples",
-    "read_ntriples",
 ]
 
 # (char, percent-encoding) — '%' MUST come first (so the encoding is
@@ -107,7 +104,7 @@ def ntriples(
     (or ``"obj"`` as an escaped string literal when ``obj_is_literal``).
 
     Null subjects/objects are dropped — N-Triples has no null term. Pure
-    projection: no shuffle, no UDF; write with :func:`write_ntriples`.
+    projection: no shuffle, no UDF.
     """
     out = facts.where(
         F.col(subj_col).isNotNull() & F.col(obj_col).isNotNull()
@@ -129,13 +126,6 @@ def ntriples(
     return out.withColumn(
         "line", F.concat_ws(" ", subj, pred, obj, F.lit("."))
     )
-
-
-def write_ntriples(lines: DataFrame, path: str, mode: str = "error") -> None:
-    """Sink the ``line`` column as a text dataset (one fact per line; a
-    directory of part files any RDF loader can cat together). The write
-    preserves upstream partitioning — no extra shuffle."""
-    lines.select("line").write.mode(mode).text(path)
 
 
 def iri_unescape(col: Column) -> Column:
@@ -205,9 +195,3 @@ def parse_ntriples(lines: DataFrame, line_col: str = "value") -> DataFrame:
             ~is_iri, F.regexp_extract(F.col("_o"), r'"((?:[^"\\]|\\.)*)"(.*)$', 2)
         ).alias("obj_qualifier"),
     )
-
-
-def read_ntriples(spark, path: str) -> DataFrame:  # noqa: ANN001
-    """Load an N-Triples dump (file or directory of part files) as a
-    DataFrame of decoded terms — see :func:`parse_ntriples`."""
-    return parse_ntriples(spark.read.text(path), "value")

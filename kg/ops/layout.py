@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 __all__ = ["interleave_bits", "zorder_key", "zorder_layout",
-           "file_skipping_stats", "scan_prune", "scan_prune_range",
+           "file_skipping_stats", "scan_prune",
            "compaction_plan"]
 
 
@@ -255,22 +255,4 @@ def scan_prune(
         "file",
         (in_range & hits).alias("keep"),
         reason.alias("reason"),
-    )
-
-
-def scan_prune_range(stats: DataFrame, lo, hi) -> DataFrame:
-    """Range-scan planning on the same metadata: keep files whose
-    [vmin, vmax] overlaps [lo, hi] (the Bloom cannot answer ranges).
-    """
-    keep = (
-        F.col("vmin").isNotNull()
-        & (F.col("vmax") >= F.lit(lo))
-        & (F.col("vmin") <= F.lit(hi))
-    )
-    return stats.select(
-        "file",
-        keep.alias("keep"),
-        F.when(keep, F.lit("keep")).otherwise(F.lit("range_miss")).alias(
-            "reason"
-        ),
     )

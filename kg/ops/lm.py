@@ -63,7 +63,6 @@ __all__ = [
     "perplexity_buckets",
     "dsir_importance",
     "dsir_select",
-    "dsir_select_approx",
     "lr_features",
     "lr_train",
     "lr_score",
@@ -418,8 +417,7 @@ def dsir_select(
     The exact top-fraction cut is a global row_number — single-reducer
     rank over the (id, importance) pairs only (tiny next to the corpus),
     the same disposition as token_budget_sample; at 10^12 docs use a
-    percentile_approx threshold on ``dsir_importance`` instead (the
-    approx variant of the same cut, cf. token_budget_sample_approx).
+    percentile_approx threshold on ``dsir_importance`` instead.
     """
     import math
 
@@ -567,36 +565,4 @@ def lr_score(
             score.alias("score"),
             (score >= 0.5).alias("pred"),
         )
-    )
-
-
-def dsir_select_approx(
-    docs: DataFrame,
-    target: DataFrame,
-    frac: float = 0.25,
-    vocab_size: int = 4096,
-    add_k: float = 0.5,
-    accuracy: int = 10000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Scale variant of :func:`dsir_select` (the same disposition as
-    token_budget_sample_approx vs token_budget_sample): instead of an
-    exact global rank over the importance pairs, cut at the
-    (1 - frac) approx-percentile of the importance distribution —
-    one scalar aggregate + a broadcast threshold filter, no global
-    ordering anywhere. Returns (id, importance, keep): ``keep`` marks
-    docs at or above the threshold (>= frac of the corpus in
-    expectation, exact up to percentile_approx error)."""
-    imp = dsir_importance(
-        docs, target, vocab_size=vocab_size, add_k=add_k,
-        id_col=id_col, text_col=text_col,
-    )
-    thr = imp.agg(
-        F.percentile_approx(
-            "importance", 1.0 - float(frac), int(accuracy)
-        ).alias("t")
-    )
-    return imp.join(F.broadcast(thr)).select(
-        id_col, "importance", (F.col("importance") >= F.col("t")).alias("keep")
     )

@@ -1,15 +1,9 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Real at this layer: schemas, partitioning, Arrow batch shapes, header
-parsing, per-channel statistics (pure numpy over the payload bytes), and
-metadata-driven frame sampling. Actual codec decode (JPEG/PNG/audio) is
-implemented behind optional-dependency guards: ``decode_image`` (Pillow)
-and ``decode_audio`` (soundfile) import their library at call time and
-raise ModuleNotFoundError where it is absent (this container — gate with
-``has_image_codec``/``has_audio_codec``); on a cluster image with the
-libs installed the same functions and the ``decoded_image_stats``
-mapInPandas op run for real, and their tests un-skip. The deterministic
-FAKE container format below keeps the plumbing exercised everywhere.
+parsing and metadata-driven frame sampling. No codec decode: the
+deterministic FAKE container format below keeps the plumbing exercised
+everywhere.
 
 FAKE container layout (deterministic, generated by synth_media):
   b"FIMG" | width:uint16 BE | height:uint16 BE | channels:uint8 | payload
@@ -79,35 +73,6 @@ def media_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-CHANNEL_STATS_SCHEMA = "media_id long, channel int, mean double, std double"
-
-
-def image_channel_stats(media: DataFrame) -> DataFrame:
-    """Per-channel byte statistics over FIMG payloads — the feature-extract
-    step shape (vectorized numpy per Arrow batch)."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                kind, w, h, c = _parse_meta(payload)
-                if kind != "image":
-                    continue
-                body = np.frombuffer(bytes(payload[9 : 9 + w * h * c]), dtype=np.uint8)
-                arr = body.reshape(-1, c)
-                for ch in range(c):
-                    col = arr[:, ch].astype(np.float64)
-                    rows.append((int(mid), ch, round(float(col.mean()), 4),
-                                 round(float(col.std()), 4)))
-            yield pd.DataFrame(rows, columns=["media_id", "channel", "mean", "std"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        _batches, schema=CHANNEL_STATS_SCHEMA
-    )
-
-
 FRAME_SAMPLE_SCHEMA = "media_id long, frame_idx int, frame binary"
 
 
@@ -132,128 +97,4 @@ def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
 
     return media.select("media_id", "payload").mapInPandas(
         _batches, schema=FRAME_SAMPLE_SCHEMA
-    )
-
-
-# ---- real codec decode, gated on optional deps (absent from this
-# container; present on a production cluster image). The Spark plumbing
-# (schema, batching, partitioning) is identical either way — only the
-# per-payload decode function needs the library.
-
-
-def has_image_codec() -> bool:
-    """True when Pillow is importable (real JPEG/PNG decode available)."""
-    import importlib.util
-
-    return importlib.util.find_spec("PIL") is not None
-
-
-def has_audio_codec() -> bool:
-    """True when soundfile is importable (real WAV/FLAC decode available)."""
-    import importlib.util
-
-    return importlib.util.find_spec("soundfile") is not None
-
-
-def decode_image(payload: bytes):
-    """Decode real image bytes (JPEG/PNG/WebP/...) to an (H, W, 3) uint8
-    numpy array via Pillow. Raises ModuleNotFoundError where Pillow is not
-    installed (this container) — gate callers with :func:`has_image_codec`."""
-    from io import BytesIO
-
-    import numpy as np
-    from PIL import Image  # ModuleNotFoundError on images without Pillow
-
-    with Image.open(BytesIO(payload)) as im:
-        return np.asarray(im.convert("RGB"))
-
-
-def _decode_wav_fallback(payload: bytes):
-    """Pure-stdlib PCM RIFF/WAV decode (wave module + numpy), normalized
-    exactly as soundfile normalizes integer PCM: int16/32768, uint8
-    (x-128)/128, int32/2^31 — so the fallback and the fast path agree to
-    the float. Covers the PCM sample widths the RIFF spec defines for
-    uncompressed audio; anything else needs the real codec."""
-    import wave as _wave
-    from io import BytesIO
-
-    import numpy as np
-
-    with _wave.open(BytesIO(payload), "rb") as w:
-        ch = w.getnchannels()
-        sw = w.getsampwidth()
-        rate = w.getframerate()
-        raw = w.readframes(w.getnframes())
-    if sw == 2:
-        arr = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif sw == 1:
-        arr = (
-            np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-        ) / 128.0
-    elif sw == 4:
-        arr = (
-            np.frombuffer(raw, dtype="<i4").astype(np.float64)
-            / 2147483648.0
-        )
-    else:
-        raise ValueError(f"unsupported PCM sample width {sw}")
-    return arr.reshape(-1, ch), int(rate)
-
-
-def decode_audio(payload: bytes):
-    """Decode real audio bytes to (samples float64 [n, ch], sample_rate).
-    Fast path: soundfile (WAV/FLAC/OGG). Where soundfile is not installed
-    (this container), PCM RIFF/WAV payloads decode through the pure-stdlib
-    fallback (:func:`_decode_wav_fallback`, identical normalization) so
-    the decode path is exercisable in-sandbox (VERDICT r4 item 7);
-    non-RIFF payloads still raise ModuleNotFoundError — gate full-format
-    callers with :func:`has_audio_codec`."""
-    from io import BytesIO
-
-    try:
-        import soundfile as sf
-    except ModuleNotFoundError:
-        if bytes(payload[:4]) == b"RIFF":
-            return _decode_wav_fallback(payload)
-        raise
-
-    data, rate = sf.read(BytesIO(payload), always_2d=True)
-    return data, int(rate)
-
-
-DECODED_IMAGE_SCHEMA = (
-    "media_id long, height int, width int, mean_r double, mean_g double,"
-    " mean_b double"
-)
-
-
-def decoded_image_stats(media: DataFrame) -> DataFrame:
-    """Real-codec analogue of :func:`channel_stats`: decode each payload
-    with Pillow inside an Arrow-batched mapInPandas pass and emit per-image
-    shape + per-channel means — the feature-extraction shape a multimodal
-    training pipeline runs over billions of images (pure map, zero
-    shuffle; undecodable payloads are skipped, not fatal). Requires
-    :func:`has_image_codec`; on this container the test suite skips it."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    arr = decode_image(bytes(payload))
-                except (ValueError, OSError):
-                    continue  # corrupt/unsupported payload: drop, don't abort
-                means = arr.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    (int(mid), int(arr.shape[0]), int(arr.shape[1]),
-                     float(means[0]), float(means[1]), float(means[2]))
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["media_id", "height", "width",
-                     "mean_r", "mean_g", "mean_b"],
-        )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _batches, schema=DECODED_IMAGE_SCHEMA
     )

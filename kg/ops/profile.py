@@ -61,6 +61,10 @@ def profile_table(
     (order-independent, unlike a distributed float sum) divided by the
     non-null count with one double division — no ``avg()``
     implementation or summation-order divergence in the hash surface.
+    The sum and that count cover the same values: the ones that fit
+    DECIMAL(38,9). NaN, +-inf and |x| >= 1e29 do not, so they are left
+    out of ``mean_num`` (they still show in ``min_num``/``max_num``).
+    ``mean_num`` is NULL when no value fits or the decimal sum overflows.
     String columns are profiled by LENGTH, which is total-order stable
     and collation-free.
     """
@@ -87,12 +91,14 @@ def profile_table(
             # exact DECIMAL sum anchor (order-independent, unlike a
             # float sum, and no rounded-double in the hash surface —
             # VERDICT r4 item 1): mean derives as exact_sum / count
-            # with ONE double division, quantized at 9dp by the cast
-            dec = col.cast(T.DecimalType(38, 9))
+            # with ONE double division, quantized at 9dp by the cast.
+            # try_: under ANSI mode a plain cast or sum would fail the
+            # job on a value or total outside DECIMAL(38,9)
+            dec = col.try_cast(T.DecimalType(38, 9))
             aggs.append(F.min(d).alias(f"{c}__min"))
             aggs.append(F.max(d).alias(f"{c}__max"))
-            aggs.append(F.sum(dec).alias(f"{c}__sumd"))
-            aggs.append(F.count(d).alias(f"{c}__cnt"))
+            aggs.append(F.try_sum(dec).alias(f"{c}__sumd"))
+            aggs.append(F.count(dec).alias(f"{c}__cnt"))
         elif isinstance(dt, T.StringType):
             ln = F.length(col).cast("long")
             aggs.append(F.min(ln).alias(f"{c}__minl"))

@@ -327,8 +327,7 @@ def _ivf_fit(
     kseed: int = 17,
 ) -> tuple[DataFrame, DataFrame]:
     """Fit the IVF coarse quantizer. Returns (assignments(vid, unit,
-    list_id), centroids(probe_list, centroid)) — shared by the one-shot
-    ann_ivf_topk and the persisted build_ivf_index/ann_ivf_search pair.
+    list_id), centroids(probe_list, centroid)) for ann_ivf_topk.
 
     ``quantizer='ml'`` (default): pyspark.ml seeded k-means — the
     battle-tested scale path, but its k-means|| init is engine-internal
@@ -358,73 +357,6 @@ def _ivf_fit(
         "probe_list int, centroid array<double>",
     )
     return assigned, cents
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Build and PERSIST an IVF index: ``{path}/centroids`` (n_lists
-    rows) and ``{path}/lists`` — unit vectors written partitioned BY
-    list_id, so a later probe's `list_id IN (...)` filter prunes at the
-    parquet scan and reads only its n_probe partition directories (the
-    inverted-list seek, as partition pruning). Build once per corpus
-    snapshot (one k-means fit + one assignment pass); serve many query
-    batches with :func:`ann_ivf_search` without refitting."""
-    assigned, cents = _ivf_fit(embeddings, n_lists, id_col, vec_col)
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-        f"{path}/lists"
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ann_ivf_search(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a :func:`build_ivf_index` index with an arbitrary query
-    table — queries need not come from the indexed corpus. Same output
-    shape as the other top-k functions: (query_id, neighbor_id, rank).
-    Self-matches (same id) are excluded, mirroring ann_ivf_topk."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    lists = spark.read.parquet(f"{path}/lists")
-    q = _unit_vectors(queries, id_col, vec_col).select(
-        F.col("vid").alias("qid"), F.col("unit").alias("qunit")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cdot", dot_product_col("qunit", "centroid"))
-        .withColumn(
-            "probe_rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.desc("cdot"), F.asc("probe_list")
-                )
-            ),
-        )
-        .where(F.col("probe_rank") <= n_probe)
-        .select("qid", "qunit", F.col("probe_list").alias("list_id"))
-    )
-    cands = probed.join(lists, "list_id").where(F.col("qid") != F.col("vid"))
-    scored = cands.withColumn("cos", dot_product_col("qunit", "unit"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("vid").alias("neighbor_id"),
-            "rank",
-        )
-    )
 
 
 def ann_ivf_topk(

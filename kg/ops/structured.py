@@ -33,7 +33,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 __all__ = [
     "extract_jsonld_blocks",
     "jsonld_triples",
-    "extract_html_tables",
     "table_triples",
     "match_table_schema",
     "page_metadata",
@@ -168,28 +167,6 @@ def _cells_expr(html_col: str) -> Column:
                 lambda c: F.trim(F.regexp_replace(c, _TAG_RE, "")),
             ),
         ),
-    )
-
-
-def extract_html_tables(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """One row per table CELL: (url, table_idx, row_idx, col_idx, cell).
-    Cell text is tag-stripped and trimmed (inner markup like <a>/<b> is
-    presentation, not content). Pure map — the nested table→row→cell
-    structure is walked with regexp_extract_all inside ``transform`` so
-    the whole parse is one projection; three posexplodes relationalize
-    it."""
-    t = pages.select(
-        F.col(url_col).alias("url"),
-        F.posexplode(_cells_expr(html_col)).alias("table_idx", "rows"),
-    )
-    r = t.select(
-        "url", "table_idx", F.posexplode("rows").alias("row_idx", "cells")
-    )
-    return r.select(
-        "url", "table_idx", "row_idx",
-        F.posexplode("cells").alias("col_idx", "cell"),
     )
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from kg.session import local_df, materialize
 
-__all__ = ["subword_vocab", "subword_tokenize", "bpe_merges", "bpe_tokenize"]
+__all__ = ["subword_vocab", "subword_tokenize", "bpe_merges"]
 
 _KIND_PRIORITY = {"word": 0, "trigram": 1, "bigram": 2, "char": 3}
 
@@ -337,54 +337,4 @@ def bpe_merges(
         )
     return local_df(
         spark, rules, "rank INT, left STRING, right STRING, merged STRING, n LONG"
-    )
-
-
-def bpe_tokenize(
-    docs: DataFrame,
-    merges: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply learned merge rules: per doc, (n_words, n_subwords,
-    fertility) under the BPE segmentation the rules induce.
-
-    The merge list is applied IN RANK ORDER to the distinct-word dim
-    (chained JVM folds — rule count is a trainer knob, bounded), then
-    the corpus maps through one broadcast join on the word — the same
-    dim-not-corpus shape as :func:`subword_tokenize`. For production
-    rule counts (32k), chain in batches over a persisted dim or swap
-    the dim transform for an Arrow-batched pairwise-rank matcher; the
-    corpus-side cost is identical.
-    """
-    rules = [
-        (r["rank"], r["left"], r["right"])
-        for r in merges.select("rank", "left", "right").collect()
-    ]
-    rules.sort()
-    dim = docs.select(
-        F.explode(_words(text_col)).alias("word")
-    ).distinct()
-    syms = _initial_symbols(F.col("word"))
-    for _, a, b in rules:
-        syms = _merge_pair(syms, a, b)
-    dim = dim.select("word", F.size(syms).alias("n_sub"))
-    exploded = docs.select(
-        F.col(id_col), F.explode(_words(text_col)).alias("word")
-    )
-    return (
-        exploded.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_words"),
-            F.sum("n_sub").cast("long").alias("n_subwords"),
-        )
-        .select(
-            id_col,
-            "n_words",
-            "n_subwords",
-            F.round(
-                F.col("n_subwords") / F.col("n_words").cast("double"), 6
-            ).alias("fertility"),
-        )
     )

@@ -378,7 +378,8 @@ def quality_rollup(
     sum_chars, top_fail, top_fail_n) — top_fail is the most common
     first-failing rule among the group's rejected docs (ties ->
     lexicographically smallest rule name, deterministic; NULL with
-    top_fail_n = 0 for all-keep groups). Everything in the hash surface
+    top_fail_n = 0 for all-keep groups). Docs with a NULL group form
+    one group of their own. Everything in the hash surface
     is BIGINT/STRING — exact counts, no ratios (readers derive keep
     rate as n_keep / n_docs).
 
@@ -415,13 +416,15 @@ def quality_rollup(
             ).alias("_b")
         )
         .select(
-            "grp",
+            F.col("grp").alias("_fgrp"),
             F.col("_b.f").alias("top_fail"),
             (-F.col("_b.nn")).cast("long").alias("top_fail_n"),
         )
     )
     return (
-        per.join(F.broadcast(fails), "grp", "left")
+        per.join(
+            F.broadcast(fails), F.col("grp").eqNullSafe(F.col("_fgrp")), "left"
+        )
         .select(
             F.col("grp").alias(group_col),
             "n_docs",

@@ -46,7 +46,6 @@ __all__ = [
     "robots_rules",
     "parse_sitemaps",
     "parse_feeds",
-    "sitemap_frontier",
     "robots_filter_frontier",
     "fetch_schedule",
     "revisit_schedule",
@@ -566,42 +565,6 @@ def parse_feeds(
             F.col("e.published_iso").alias("published_iso"),
         )
         .where(F.col("link") != "")
-    )
-
-
-def sitemap_frontier(
-    sitemaps: DataFrame,
-    fetched: DataFrame,
-    xml_col: str = "xml",
-    id_col: str = "sitemap_url",
-    fetched_url_col: str = "url",
-) -> DataFrame:
-    """Crawl-frontier candidates from sitemaps: parse → normalize each
-    loc (kg/ops/webnorm.py rules, so sitemap urls and crawled urls meet
-    on the same key) → drop everything already fetched → one row per
-    new normalized url with (n_sitemaps, lastmod_iso = max over
-    asserting entries — recency is the scheduling signal).
-
-    Scale shape: the parse is a pure map; fetched-set subtraction is ONE
-    left-anti join on the normalized key (broadcast when the fetched dim
-    is small, shuffle-hash under AQE when it is corpus-sized); the
-    rollup is one partial-aggable groupBy. Child-sitemap index rows are
-    excluded — they are fetch work, not page frontier."""
-    from kg.ops.webnorm import normalize_urls
-
-    parsed = parse_sitemaps(sitemaps, xml_col, id_col)
-    urls = normalize_urls(
-        parsed.where(F.col("kind") == "url").select(
-            "sitemap_url", F.col("loc").alias("url"), "lastmod_iso"
-        )
-    )
-    fetched_norm = normalize_urls(
-        fetched.select(F.col(fetched_url_col).alias("url"))
-    ).select("url_norm").distinct()
-    fresh = urls.join(fetched_norm, "url_norm", "left_anti")
-    return fresh.groupBy("url_norm", "host").agg(
-        F.countDistinct("sitemap_url").alias("n_sitemaps"),
-        F.max("lastmod_iso").alias("lastmod_iso"),
     )
 
 

@@ -38,7 +38,6 @@ __all__ = [
     "build_gazetteer",
     "compile_regexes",
     "find_entities",
-    "max_phrase_words",
 ]
 
 
@@ -55,17 +54,6 @@ def build_gazetteer(entities: dict[str, list[str]]) -> dict[str, set[str]]:
     return {
         name: {norm_value(v) for v in values} for name, values in entities.items()
     }
-
-
-def max_phrase_words(gazetteer: dict[str, set[str]]) -> int:
-    """Longest phrase (in whitespace words) across all dictionary values."""
-    longest = 1
-    for values in gazetteer.values():
-        for v in values:
-            n = len(v.split())
-            if n > longest:
-                longest = n
-    return longest
 
 
 def compile_regexes(regex_entities: dict[str, str]) -> dict[str, re.Pattern]:

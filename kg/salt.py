@@ -17,13 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_join", "subject_frequencies"]
-
-
-def subject_frequencies(df: DataFrame, key: str, top_n: int = 100) -> DataFrame:
-    """Pre-pass: count per-key frequency (the hot-key diagnostic the salting
-    decision is based on). Cheap: partial-aggregated count."""
-    return df.groupBy(key).count().orderBy(F.desc("count")).limit(top_n)
+__all__ = ["salted_join"]
 
 
 def salted_join(

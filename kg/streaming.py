@@ -451,44 +451,6 @@ def read_fact_store(spark, store_dir: str) -> DataFrame:
     return spark.read.parquet(f"{store_dir}/v{max(ids)}")
 
 
-def vacuum_fact_store(spark, store_dir: str, keep_last: int = 2) -> list:
-    """Delete fact-store versions older than the newest ``keep_last``.
-
-    Routine maintenance for a long-running stream_fact_merge store, which
-    otherwise accumulates one full-table directory per epoch. Keeping
-    ``keep_last >= 2`` preserves the replay contract: a replayed epoch is
-    the NEWEST epoch (Structured Streaming retries the failed batch, never
-    an older committed one), and its merge input is the latest version
-    strictly older than itself — both survive the vacuum.
-
-    Uses the Hadoop FileSystem API so the same call works on local disk,
-    HDFS, or an object store (where a bucket lifecycle rule is the
-    alternative). Driver-side metadata ops only — O(#versions), no job.
-
-    Returns the sorted list of deleted version ids.
-    """
-    import re
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    versions = []
-    for st in fs.listStatus(root):
-        m = re.fullmatch(r"v(\d+)", st.getPath().getName())
-        if m and st.isDirectory():
-            versions.append((int(m.group(1)), st.getPath()))
-    versions.sort()
-    deleted = []
-    for vid, path in versions[: max(0, len(versions) - keep_last)]:
-        fs.delete(path, True)
-        deleted.append(vid)
-    return deleted
-
-
 def stream_hll_merge(
     store_dir: str,
     group_cols=("lang",),

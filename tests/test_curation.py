@@ -10,7 +10,6 @@ from kg.ops.curation import (
     benchmark_contamination,
     pack_sequences,
     token_budget_sample,
-    token_budget_sample_approx,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -92,24 +91,6 @@ class TestTokenBudget:
         assert {r["stratum"] for r in rows} == {"all"}
         kept_tok = sum(r["n_tokens"] for r in rows if r["keep"])
         assert kept_tok <= 10
-
-    def test_approx_hits_budget_within_tolerance(self, spark, documents):
-        total = documents.select(
-            F.sum(F.size(F.split(F.col("text"), r"\s+")))).first()[0]
-        budget = int(total * 0.5)
-        out = token_budget_sample_approx(documents, budget_tokens=budget)
-        kept = out.filter("keep").agg(F.sum("n_tokens")).first()[0] or 0
-        # hash-range cut is exact in expectation; allow 25% relative slack
-        # at this corpus size
-        assert kept == pytest.approx(budget, rel=0.25)
-
-    def test_approx_deterministic(self, spark, documents):
-        out1 = token_budget_sample_approx(documents, budget_tokens=5000)
-        out2 = token_budget_sample_approx(
-            documents.repartition(13), budget_tokens=5000)
-        a = sorted(r["doc_id"] for r in out1.filter("keep").collect())
-        b = sorted(r["doc_id"] for r in out2.filter("keep").collect())
-        assert a == b
 
 
 class TestPackSequences:
@@ -898,57 +879,3 @@ class TestIsotonicCalibrate:
         df = spark.createDataFrame(rows, "score double, label int")
         got = {r["bin"]: r["fit"] for r in isotonic_calibrate(df, n_bins=2).collect()}
         assert got == {0: 0.5, 1: 0.5}
-
-
-class TestIsotonicApply:
-    def test_applies_step_function_with_gap_fill(self, spark):
-        from kg.ops.curation import isotonic_apply
-
-        fit = spark.createDataFrame(
-            [(0, 5, 2, 0.4, 0.4), (3, 5, 4, 0.8, 0.8)],
-            "bin int, n long, n_pos long, rate double, fit double",
-        )
-        scored = spark.createDataFrame(
-            [(0.05,), (0.30,), (0.60,), (0.99,)], "score double"
-        )
-        got = [
-            r["calibrated"]
-            for r in isotonic_apply(scored, fit, n_bins=4)
-            .orderBy("score")
-            .collect()
-        ]
-        # bin0 -> 0.4; bin1/2 (unseen) inherit bin0's 0.4; bin3 -> 0.8
-        assert got == [0.4, 0.4, 0.4, 0.8]
-
-    def test_calibrated_is_monotone_in_score(self, spark):
-        from kg.ops.curation import isotonic_apply, isotonic_calibrate
-
-        import random as _random
-
-        _random.seed(3)
-        rows = [
-            (s, 1 if _random.random() < 0.2 + 0.6 * s else 0)
-            for s in (_random.random() for _ in range(1500))
-        ]
-        df = spark.createDataFrame(rows, "score double, label int")
-        fit = isotonic_calibrate(df, n_bins=16)
-        out = (
-            isotonic_apply(df, fit, n_bins=16)
-            .orderBy("score")
-            .select("calibrated")
-            .collect()
-        )
-        vals = [r["calibrated"] for r in out]
-        assert vals == sorted(vals)
-
-    def test_empty_fit_raises(self, spark):
-        from kg.ops.curation import isotonic_apply
-
-        fit = spark.createDataFrame(
-            [], "bin int, n long, n_pos long, rate double, fit double"
-        )
-        scored = spark.createDataFrame([(0.5,)], "score double")
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            isotonic_apply(scored, fit, n_bins=4)

@@ -1,12 +1,14 @@
 """Local replica of the driver's correctness gate: run every queries() entry
-at sf0.01 and compare against oracle_sql() via DuckDB (row count + sorted
-value equality). Queries without an oracle get a rows-structure check."""
+at sf0.01 and compare against oracle_sql() via DuckDB (row count, column
+names, per-column pandas dtype kind, sorted value equality). Queries without
+an oracle get a rows-structure check."""
 
 from __future__ import annotations
 
 import math
 
 import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -55,26 +57,44 @@ def test_query_matches_oracle(spark, ddb, name):
         assert len(spark_pdf.columns) >= 2
         assert len(spark_pdf) >= 0
         return
-    oracle_pdf = ddb.execute(ORACLES[name]).df()
+    assert_frames_match(name, spark_pdf, ddb.execute(ORACLES[name]).df())
+
+
+def assert_frames_match(name, spark_pdf, oracle_pdf):
+    """Same rows, column names and per-column dtype kind, then the same
+    sorted values. The kind check comes first because ``_normalize`` lets
+    ``0 == 0.0`` pass, while the driver's type-aware hash tells an int
+    column from a float one."""
     assert len(spark_pdf) == len(oracle_pdf), (
         f"{name}: rows {len(spark_pdf)} vs oracle {len(oracle_pdf)}"
     )
     assert sorted(c.lower() for c in spark_pdf.columns) == sorted(
         c.lower() for c in oracle_pdf.columns
     ), f"{name}: column names differ"
+    kinds = {c.lower(): t.kind for c, t in spark_pdf.dtypes.items()}
+    want_kinds = {c.lower(): t.kind for c, t in oracle_pdf.dtypes.items()}
+    assert kinds == want_kinds, f"{name}: dtype kinds {kinds} vs oracle {want_kinds}"
     got = _normalize(spark_pdf.to_dict("records"), spark_pdf.columns)
     want = _normalize(oracle_pdf.to_dict("records"), oracle_pdf.columns)
     mismatches = [(g, w) for g, w in zip(got, want) if g != w]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
 
 
-def test_doc_profile_oracle_has_no_hugeint(ddb):
+def test_compare_rejects_int_against_float():
+    spark_pdf = pd.DataFrame({"n": pd.Series([0, 1], dtype="int64")})
+    oracle_pdf = pd.DataFrame({"n": pd.Series([0.0, 1.0], dtype="float64")})
+    with pytest.raises(AssertionError, match="dtype kinds"):
+        assert_frames_match("int_vs_float", spark_pdf, oracle_pdf)
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_oracle_has_no_hugeint(ddb, name):
     # DuckDB widens sum() over integers to HUGEINT (128-bit), while Spark
     # sums to a 64-bit long; a type-aware result hash then differs even
-    # when the values agree, so the oracle casts its sums to BIGINT
-    described = ddb.execute("DESCRIBE " + ORACLES["doc_profile"]).fetchall()
+    # when the values agree, so oracles cast their sums to BIGINT
+    described = ddb.execute("DESCRIBE " + ORACLES[name]).fetchall()
     types = {r[0]: r[1] for r in described}
-    assert "HUGEINT" not in types.values(), types
+    assert not [t for t in types.values() if "HUGEINT" in t], types
 
 
 def test_entry_smoke(spark):

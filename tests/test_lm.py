@@ -328,32 +328,3 @@ class TestLrQualityClassifier:
         c = sorted(map(tuple,
                        lr_score(df.repartition(3), w2, b2).collect()))
         assert a == c
-
-
-class TestDsirApprox:
-    def test_approx_cut_tracks_exact_rank_cut(self, spark):
-        from kg.ops.lm import dsir_select, dsir_select_approx
-
-        en = "the cat sat on the mat".split()
-        xx = "zx qv wk jr pl mn".split()
-        # mixing ratio varies per doc -> importances are all distinct
-        rows = [
-            (i, " ".join(en * (i + 1) + xx * (16 - i)),
-             "en" if i >= 8 else "xx")
-            for i in range(16)
-        ]
-        docs = spark.createDataFrame(
-            rows, "doc_id long, text string, lang string"
-        )
-        target = docs.where(F.col("lang") == "en")
-        exact = {r.doc_id for r in
-                 dsir_select(docs, target, frac=0.5, vocab_size=32)
-                 .collect()}
-        out = dsir_select_approx(docs, target, frac=0.5, vocab_size=32)
-        kept = {r.doc_id for r in out.where("keep").collect()}
-        assert out.count() == len(rows)
-        # the >= threshold cut keeps AT LEAST the exact top-frac set; the
-        # doc sitting exactly at the percentile may ride along (keeps
-        # >= frac by design, never drops an at-threshold doc)
-        assert kept >= exact
-        assert len(kept) - len(exact) <= 1

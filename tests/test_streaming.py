@@ -424,46 +424,6 @@ class TestStreamFactMerge:
         )
         assert first == batch and len(batch) > 0
 
-    def test_vacuum_keeps_newest_and_replay_still_works(self, spark, tmp_path):
-        import os
-
-        import pytest
-        from pyspark.sql import functions as F
-
-        from kg.streaming import (
-            read_fact_store,
-            stream_fact_merge,
-            vacuum_fact_store,
-        )
-
-        pages = spark.read.parquet("fixtures/pages_tiny.parquet")
-        quarter = F.abs(F.xxhash64("url")) % 4
-        alias_dim = spark.read.parquet("fixtures/alias_dict.parquet")
-        store = str(tmp_path / "store")
-        fold = stream_fact_merge(alias_dim, store, max_urls=8)
-        for epoch in range(4):
-            fold(pages.where(quarter == epoch), epoch)
-        latest = sorted(map(tuple, read_fact_store(spark, store).collect()))
-
-        assert vacuum_fact_store(spark, store, keep_last=2) == [0, 1]
-        assert sorted(os.listdir(store)) == ["v2", "v3"]
-        # latest version untouched; reads resolve to the same table
-        assert sorted(
-            map(tuple, read_fact_store(spark, store).collect())
-        ) == latest
-        # replay of the newest epoch (the only one Structured Streaming
-        # retries) still finds its merge input v2 and rewrites v3 unchanged
-        fold(pages.where(quarter == 3), 3)
-        assert sorted(
-            map(tuple, read_fact_store(spark, store).collect())
-        ) == latest
-
-        # idempotent second vacuum, missing dir is a no-op, bad arg rejected
-        assert vacuum_fact_store(spark, store, keep_last=2) == []
-        assert vacuum_fact_store(spark, str(tmp_path / "nope")) == []
-        with pytest.raises(ValueError):
-            vacuum_fact_store(spark, store, keep_last=0)
-
 
 class TestStreamHLL:
     def test_merged_equals_batch_and_replay_idempotent(self, spark, tmp_path):

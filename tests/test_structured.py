@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kg.ops.structured import (
-    extract_html_tables,
     extract_jsonld_blocks,
     jsonld_triples,
     table_triples,
@@ -100,14 +99,6 @@ class TestHtmlTables:
 <table><tr><td>layout only</td></tr></table>
 <table><tr><th>just one header row</th><th>x</th></tr></table>
 </body></html>"""
-
-    def test_cell_view(self, spark):
-        cells = extract_html_tables(_pages(spark, self.HTML))
-        assert cells.where("table_idx = 0").count() == 9
-        r = cells.where(
-            "table_idx = 0 and row_idx = 1 and col_idx = 0"
-        ).first()
-        assert r.cell == "Acme"  # inner <a> stripped
 
     def test_table_triples_semantics(self, spark):
         got = sorted(

@@ -480,19 +480,6 @@ class TestSitemaps:
              "https://ex.com/sitemap2.xml", "2024-02-01"),
         }
 
-    def test_frontier_normalizes_and_subtracts_fetched(self, spark):
-        from kg.ops.weblinks import sitemap_frontier
-
-        fetched = spark.createDataFrame(
-            [("https://ex.com/a",)], "url string"
-        )
-        rows = sitemap_frontier(self._sitemaps(spark), fetched).collect()
-        # /a is fetched; /b survives with tracking param normalized away;
-        # the child-sitemap index entry is fetch work, not frontier
-        assert [(r.url_norm, r.host, r.n_sitemaps) for r in rows] == [
-            ("https://ex.com/b", "ex.com", 1)
-        ]
-
     def test_parse_plan_is_jvm_only(self, spark):
         from kg.ops.weblinks import parse_sitemaps
 
