@@ -2,24 +2,39 @@
 
 Unit of work = ``url_hash_bucket = pmod(xxhash64(url), n_buckets)``. Each
 stage writes its output partitioned by bucket; a ``lineage`` table records
-(stage, bucket, run_config_hash, counts, wall) rows only AFTER the bucket's
-data is durably written. Resume = anti-join: buckets present in lineage with
-a matching config hash are skipped; everything else is (re)computed with
-dynamic partition overwrite, so a killed run leaves at worst orphan partition
-files that the retry overwrites — output is exactly-once per bucket.
+(stage, bucket, run_config_hash, counts) rows only AFTER the bucket's data
+is written. Resume = anti-join: buckets present in lineage with a matching
+config hash are skipped; everything else is (re)computed with dynamic
+partition overwrite, so a killed run leaves at worst orphan partition files
+that the retry overwrites — output is exactly-once per bucket.
 
-Why lineage-as-commit-log works on object storage: the parquet partition
-write and the lineage append are two steps, and the lineage append happens
-last; a bucket is "done" iff its lineage row exists. Rewriting a partition
-is idempotent (dynamic overwrite). This is the same commit discipline
-Iceberg snapshots give; we implement it directly since Iceberg jars are not
-available in this sandbox (the writer targets plain partitioned parquet; the
-layout maps 1:1 onto an Iceberg table with an identity bucket partition).
+One ``run_stage`` commits in this order, and a bucket is "done" iff its
+lineage row exists:
+
+1. data write: the stage's single ``partitionBy(...).parquet`` Spark job;
+2. errors append (capture-enabled stages only): the just-written error
+   partitions, appended to ``_errors`` by Spark;
+3. lineage: the todo buckets' rows as ONE parquet file, written by the
+   driver under a dot-prefixed temp name, then renamed into ``_lineage``;
+4. metrics: the stage's row, committed into ``_metrics`` the same way.
+
+Steps 3 and 4 start no Spark job: each bucket's ``n_out`` and the stage's
+``peak_mem_mb`` are read from the parquet footers of the files step 1 wrote,
+and ``completed_buckets`` reads ``_lineage`` with pyarrow. Spark and pyarrow
+both skip dot-prefixed files, so a commit file appears whole or not at all:
+a crash mid-commit leaves an ignored temp file, and the retry recomputes the
+uncommitted buckets (rewriting a partition is idempotent).
+
+The footer scan, the rename and the lineage listing are local-filesystem
+calls; commits to object stores (where a rename is a copy) are out of
+scope. There the layout maps 1:1 onto an Iceberg table with an identity
+bucket partition, whose snapshot commit gives the same discipline.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 from collections.abc import Callable
@@ -27,8 +42,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from kg.session import local_df
+from kg.session import arrow_table, local_df
 
 __all__ = ["add_bucket", "CheckpointedPipeline"]
 
@@ -44,8 +60,10 @@ LINEAGE_SCHEMA = (
 # Per-RUN stage metrics: n_buckets_done / n_rows_out count THIS run's todo
 # buckets only (a resume that skips completed buckets reports only what it
 # (re)computed; the cumulative stage totals are sum(n_out) over lineage).
-# peak_mem_mb: max Python-worker peak RSS observed right after the stage
-# (O23 — the reference @profile-on-populate analogue).
+# peak_mem_mb: max Python-worker peak RSS the stage's own UDF batches
+# sampled into a `peak_mb` column (capture_metrics=True on the stage fn;
+# O23 — the reference @profile-on-populate analogue). NULL means the stage
+# did not sample it.
 METRICS_SCHEMA = (
     "stage string, run_id string, n_buckets_done int, n_rows_out long, "
     "wall_ms double, peak_mem_mb double, ts timestamp"
@@ -87,6 +105,9 @@ class CheckpointedPipeline:
         self.run_config = run_config or {}
         self.cfg_hash = config_hash({"n_buckets": n_buckets, **self.run_config})
         self.run_id = uuid.uuid4().hex[:12]
+        # stage -> the schema this object last wrote it with: reading a
+        # stage back with its schema given spares Spark the inference job
+        self._written: dict[str, StructType] = {}
         self.spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
@@ -97,7 +118,7 @@ class CheckpointedPipeline:
         return str(self.base / "_lineage")
 
     def _has_lineage(self) -> bool:
-        return any(Path(self._lineage_path()).glob("*.parquet"))
+        return bool(_data_files(Path(self._lineage_path())))
 
     def read_lineage(self) -> DataFrame:
         if not self._has_lineage():
@@ -106,19 +127,36 @@ class CheckpointedPipeline:
 
     def completed_buckets(self, stage: str) -> set[int]:
         if not self._has_lineage():
-            # fresh base: nothing is committed, so no job is needed to say so
+            # fresh base: nothing is committed
             return set()
-        rows = (
-            self.read_lineage()
-            .where(
-                (F.col("stage") == stage)
-                & (F.col("run_config_hash") == self.cfg_hash)
-            )
-            .select("url_hash_bucket")
-            .distinct()
-            .collect()
+        import pyarrow.dataset as ds
+
+        # a driver-side read of the small commit log: no Spark job. The
+        # explicit schema reads files that Spark appended (INT96 ts) and
+        # files that _commit wrote alike.
+        lineage = ds.dataset(
+            self._lineage_path(), format="parquet",
+            schema=arrow_table([], LINEAGE_SCHEMA).schema,
         )
-        return {r[0] for r in rows}
+        table = lineage.to_table(
+            columns=["url_hash_bucket"],
+            filter=(ds.field("stage") == stage)
+            & (ds.field("run_config_hash") == self.cfg_hash),
+        )
+        return set(table.column("url_hash_bucket").to_pylist())
+
+    def _commit(self, table: str, rows: list[tuple], ddl: str) -> None:
+        """Append ``rows`` to ``base/<table>`` as one new parquet file:
+        written under a dot-prefixed name that every reader skips, then
+        renamed into place, so the file appears whole or not at all."""
+        import pyarrow.parquet as pq
+
+        d = self.base / table
+        d.mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = d / f".{name}.tmp"
+        pq.write_table(arrow_table(rows, ddl), tmp)
+        os.replace(tmp, d / name)
 
     # ---- stage execution ----
 
@@ -158,7 +196,6 @@ class CheckpointedPipeline:
         # partitions are appended to base/_errors (url, stage, error) —
         # no double write, no second pass over the stage's payload.
         capture = "error" in out.columns
-        has_mem_col = "peak_mb" in out.columns
         if "url_hash_bucket" not in out.columns:
             out = add_bucket(out, self.n_buckets)
         part_cols = (["has_error"] if capture else []) + ["url_hash_bucket"]
@@ -172,23 +209,13 @@ class CheckpointedPipeline:
             self.stage_output_path(stage)
         )
         wall_ms = (time.monotonic() - t0) * 1000.0
-
-        # count ONLY the buckets this run wrote — partition pruning keeps the
-        # scan to the todo partitions; counting the whole stage output would
-        # re-read every previously-completed bucket on each resume.
-        # read_stage excludes captured-error rows, so n_out counts CLEAN rows
-        written = self.read_stage(stage).where(
-            F.col("url_hash_bucket").isin(*[int(b) for b in todo_buckets])
+        # what the write left on disk, in the order Spark infers it: data
+        # columns, then the partition columns
+        self._written[stage] = written_schema = StructType(
+            [f for f in out.schema if f.name not in part_cols]
+            + [out.schema[c] for c in part_cols]
         )
-        counts = written.groupBy("url_hash_bucket").count().collect()
-        count_map = {r["url_hash_bucket"]: r["count"] for r in counts}
-        raw_todo = None
-        if capture or has_mem_col:
-            raw_todo = self.spark.read.parquet(
-                self.stage_output_path(stage)
-            ).where(
-                F.col("url_hash_bucket").isin(*[int(b) for b in todo_buckets])
-            )
+
         if capture:
             # append ONLY this run's buckets — the stage dir also holds
             # error partitions from previously-completed runs, which have
@@ -201,11 +228,18 @@ class CheckpointedPipeline:
             # partitions survive a fully-clean retry — without the
             # anti-join those phantom rows (urls that also have clean
             # output) would be appended as errors.
-            err_rows = raw_todo.where(F.col("has_error") == "true").select(
-                F.col("url").cast("string").alias("url"),
-                F.lit(stage).alias("stage"),
-                "error",
+            in_todo = F.col("url_hash_bucket").isin(*todo_buckets)
+            err_rows = (
+                self.spark.read.schema(written_schema)
+                .parquet(self.stage_output_path(stage))
+                .where(in_todo & (F.col("has_error") == "true"))
+                .select(
+                    F.col("url").cast("string").alias("url"),
+                    F.lit(stage).alias("stage"),
+                    "error",
+                )
             )
+            written = self.read_stage(stage).where(in_todo)
             if "url" in written.columns:
                 clean_urls = written.select(
                     F.col("url").cast("string").alias("url")
@@ -214,53 +248,40 @@ class CheckpointedPipeline:
             err_rows.coalesce(1).write.mode("append").parquet(
                 str(self.base / "_errors")
             )
-        if has_mem_col:
-            # O23, in-stage: the stage's own UDF batches sampled their
-            # worker's ru_maxrss into `peak_mb` (capture_metrics=True on the
-            # stage fn) — valid on any cluster topology, unlike the post-hoc
-            # probe. Max-aggregate from the just-written todo partitions
-            # (column-pruned scan; values were produced in-stage).
-            row = raw_todo.agg(F.max("peak_mb")).first()
-            peak_mem_mb = float(row[0]) if row and row[0] is not None else 0.0
-        else:
-            peak_mem_mb = self._probe_peak_mem(written)
-        now = _now_utc()
-        lineage_rows = [
-            (
-                stage,
-                int(b),
-                self.cfg_hash,
-                self.run_id,
-                int(count_map.get(b, 0)),
-                now,
-            )
-            for b in todo_buckets
-        ]
-        local_df(self.spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self._lineage_path())
 
-        metrics_rows = [
-            (
-                stage,
-                self.run_id,
-                len(todo_buckets),
-                int(sum(count_map.values())),
-                wall_ms,
-                peak_mem_mb,
-                now,
-            )
-        ]
-        local_df(self.spark, metrics_rows, METRICS_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(self.base / "_metrics"))
+        n_out, peak_mem_mb = self._probe_peak_mem(
+            stage, todo_buckets, capture, "peak_mb" in out.columns
+        )
+        now = _now_utc()
+        self._commit(
+            "_lineage",
+            [
+                (stage, b, self.cfg_hash, self.run_id, n_out[b], now)
+                for b in todo_buckets
+            ],
+            LINEAGE_SCHEMA,
+        )
+        self._commit(
+            "_metrics",
+            [(
+                stage, self.run_id, len(todo_buckets), sum(n_out.values()),
+                wall_ms, peak_mem_mb, now,
+            )],
+            METRICS_SCHEMA,
+        )
         return self.read_stage(stage)
 
     def read_stage(self, stage: str) -> DataFrame:
         """Stage output, CLEAN rows only: for capture-enabled stages the
         has_error=true partitions are pruned at the scan (leading partition
-        column) and the bookkeeping columns (error/peak_mb) dropped."""
-        df = self.spark.read.parquet(self.stage_output_path(stage))
+        column) and the bookkeeping columns (error/peak_mb) dropped.
+
+        A stage this object wrote is read with the schema it wrote; any
+        other stage's schema is inferred by Spark, which costs a job."""
+        reader = self.spark.read
+        if stage in self._written:
+            reader = reader.schema(self._written[stage])
+        df = reader.parquet(self.stage_output_path(stage))
         if "has_error" in df.columns:
             df = df.where(F.col("has_error") != "true").drop(
                 "has_error", "error"
@@ -328,41 +349,48 @@ class CheckpointedPipeline:
             return local_df(self.spark, [], ERRORS_SCHEMA)
         return self.spark.read.parquet(str(p)).distinct()
 
-    def _probe_peak_mem(self, written: DataFrame) -> float:
-        """O23 FALLBACK (LOCAL-MODE-ONLY attribution): max Python-worker
-        peak RSS (MB) right after the stage ran, for stage fns that did not
-        emit an in-stage ``peak_mb`` column (capture_metrics).
+    def _probe_peak_mem(
+        self, stage: str, buckets: list[int], capture: bool, sampled: bool
+    ) -> tuple[dict[int, int], float | None]:
+        """Read from the parquet footers of the files the stage just wrote
+        for ``buckets``: each bucket's CLEAN row count (0 for a bucket with
+        no output file), and the max of the ``peak_mb`` column statistics
+        when the stage ``sampled`` it (else ``None``). No Spark job; the
+        name is the one ``perfbench/spans.py`` traces."""
+        import pyarrow.parquet as pq
 
-        ``resource.getrusage(RUSAGE_SELF).ru_maxrss`` is the process
-        high-water mark; ON LOCAL MODE Python workers are reused across
-        tasks (spark.python.worker.reuse) so the probe tasks land in the
-        workers that ran the stage UDFs. On a multi-executor cluster the
-        probe tasks can land on fresh workers/executors and report
-        bootstrap RSS — use capture_metrics=True on the stage fn there,
-        which samples ru_maxrss inside the stage's own batches (the
-        preferred path; this probe is only the legacy fallback). The probe
-        scans ONLY the bucket column of the just-written partitions
-        (column-pruned parquet read, one tiny mapInPandas pass).
-        """
-        probe = written.select("url_hash_bucket").mapInPandas(
-            _peak_rss_batches, schema="peak_mb double"
-        )
-        row = probe.agg(F.max("peak_mb")).first()
-        return float(row[0]) if row and row[0] is not None else 0.0
+        root = Path(self.stage_output_path(stage))
+        clean = root / "has_error=false" if capture else root
+        dirs = [clean, root / "has_error=true"] if capture else [clean]
+        n_out, peak = dict.fromkeys(buckets, 0), None
+        for d in dirs:
+            for b in buckets:
+                for f in _data_files(d / f"url_hash_bucket={b}"):
+                    meta = pq.read_metadata(f)
+                    if d == clean:
+                        n_out[b] += meta.num_rows
+                    if sampled:
+                        peak = _max_stat(meta, "peak_mb", peak)
+        return n_out, peak
 
 
-def _peak_rss_batches(batches):
-    """One (peak_mb) row per non-empty Arrow batch: this worker's RSS
-    high-water mark (ru_maxrss is KB on Linux)."""
-    import resource
+def _data_files(d: Path) -> list[Path]:
+    """The parquet files directly under ``d`` that Spark and pyarrow read:
+    names starting with '.' or '_' (temp files, markers) are skipped."""
+    return [f for f in d.glob("*.parquet") if f.name[0] not in "._"]
 
-    import pandas as pd
 
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        peak_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-        yield pd.DataFrame({"peak_mb": [peak_kb / 1024.0]})
+def _max_stat(meta, column: str, current: float | None) -> float | None:
+    """``current`` raised to the max statistic of ``column`` over the row
+    groups in the parquet footer ``meta``."""
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        for j in range(rg.num_columns):
+            col = rg.column(j)
+            st = col.statistics
+            if col.path_in_schema == column and st is not None and st.has_min_max:
+                current = st.max if current is None else max(current, st.max)
+    return current
 
 
 def _now_utc():

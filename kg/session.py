@@ -9,12 +9,12 @@ the same plan-relevant settings:
   Python UDFs; mapInPandas/pandas_udf only).
 - shuffle partitions sized for the local harness; a real cluster run passes
   its own value (≈ 2-3x total cores) via spark-submit --conf.
-- driver-side rows (lineage/metrics commits, gazetteer and regex dims,
-  union-find output, rule tables) become DataFrames only through
-  :func:`local_df`. ``createDataFrame(<python list>, ddl)`` pickles the rows
-  into a ``parallelize`` RDD, so every job that scans the result starts a
-  Python worker; ``local_df`` ships them as one Arrow table and the JVM
-  scans a ``LocalRelation`` with no Python worker at all.
+- driver-side rows (gazetteer and regex dims, union-find output, rule
+  tables) become DataFrames only through :func:`local_df`.
+  ``createDataFrame(<python list>, ddl)`` pickles the rows into a
+  ``parallelize`` RDD, so every job that scans the result starts a Python
+  worker; ``local_df`` ships them as one Arrow table and the JVM scans a
+  ``LocalRelation`` with no Python worker at all.
 """
 
 from __future__ import annotations
@@ -37,14 +37,20 @@ def local_df(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFra
     Unlike an RDD scan, the relation has exact size statistics, so Catalyst
     broadcasts it into joins on its own when it is small.
     """
+    return spark.createDataFrame(arrow_table(rows, ddl), ddl)
+
+
+def arrow_table(rows: Iterable[Sequence], ddl: str):
+    """``rows`` (tuples in ``ddl`` column order) as a ``pyarrow.Table``
+    whose types are Spark's Arrow mapping of the DDL: the table that
+    :func:`local_df` ships to the JVM, and the file the checkpoint commit
+    writes."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
-    struct = _parse_datatype_string(ddl)
-    arrow_type = pa.struct(list(to_arrow_schema(struct)))
-    table = pa.Table.from_struct_array(pa.array(list(rows), type=arrow_type))
-    return spark.createDataFrame(table, struct)
+    arrow_type = pa.struct(list(to_arrow_schema(_parse_datatype_string(ddl))))
+    return pa.Table.from_struct_array(pa.array(list(rows), type=arrow_type))
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -72,6 +78,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The running session if there is one, else a new session with the
+    defaults above.
+
+    A running session keeps its conf: ``getOrCreate`` would write every
+    builder default onto it (32 shuffle partitions, say, over the value a
+    notebook or test harness chose). Only what the caller asks for here,
+    ``shuffle_partitions`` and ``extra_conf``, is set on it."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        conf = dict(extra_conf or {})
+        if shuffle_partitions:
+            conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        for k, v in conf.items():
+            active.conf.set(k, v)
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

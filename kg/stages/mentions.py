@@ -49,8 +49,6 @@ from kg.normalize import PUNCT
 from kg.oracle import BadRegexError
 from kg.session import local_df
 
-MENTIONS_SCHEMA = "url string, matched_word string, entity_name string, detector string"
-
 
 @dataclass(frozen=True)
 class GazetteerPlan:

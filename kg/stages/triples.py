@@ -202,8 +202,8 @@ def detect_ner_mentions(
 
     ``capture_metrics=True`` (O23): each batch also emits this worker's RSS
     high-water mark in a ``peak_mb`` column, sampled inside the stage's own
-    UDF — CheckpointedPipeline max-aggregates it into the metrics table
-    (correct on any cluster topology, unlike the post-hoc probe).
+    UDF (correct on any cluster topology) — CheckpointedPipeline takes the
+    max from the written files' footer statistics into the metrics table.
     """
     from kg.backends import resolve_backend
 

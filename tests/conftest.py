@@ -20,12 +20,11 @@ def spark():
 def _reset_session_conf():
     """Give every test the session conf the ``spark`` fixture made.
 
-    In-process ``run_pipeline.main`` calls ``get_spark()``, whose
-    ``getOrCreate`` writes its builder options (32 shuffle partitions) onto
-    the shared session, and ``CheckpointedPipeline`` sets dynamic partition
-    overwrite. Left in place, every later test inherits them; stateful
+    ``CheckpointedPipeline`` sets dynamic partition overwrite on the shared
+    session, and tests set confs of their own (shuffle partitions among
+    them). Left in place, every later test inherits them; stateful
     streaming tests, whose state-store count follows the shuffle
-    partitions, then run 3-6x slower."""
+    partitions, run 3-6x slower at 32 partitions than at 8."""
     yield
     if not _BASE_CONF:
         return

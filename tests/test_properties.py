@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import random
 import re
-import string
 
 import pytest
 from hypothesis import given, settings

@@ -32,8 +32,6 @@ ALLOWED = {
     "verify_extraction": "byte-identity audit in tests/test_mentions_spark.py",
     "reload_backends": "model reload behaviour (O18) pinned by tests/test_backends.py",
     "register_backend": "model reload behaviour (O18) pinned by tests/test_backends.py",
-    "MENTIONS_SCHEMA": "kg/stages/mentions.py table-schema note; nothing reads "
-                       "it, so it goes with the next change to kg/stages/",
 }
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
