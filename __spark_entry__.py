@@ -1,15 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship mention-detection query on sf0.001.
-``queries()`` — one callable per implemented operator (SURVEY.md §2 + the
-training-data ops); each takes (spark, sf_dir) and returns a DataFrame.
-``oracle_sql()`` — DuckDB-runnable ANSI SQL equivalents. Only the two
-iterative/randomized ANN queries (sign-LSH top-k, IVF k-means top-k) have no
-oracle entry and get the driver's weaker rows-only check (both are pinned by
-recall-vs-bruteforce tests instead); every other query, including banded
-MinHash near-dup and SimHash, is oracle-backed. Fixture-based queries (kg_*)
-read the committed deterministic corpus under /root/repo/fixtures by
-absolute path — DuckDB reads the same files.
+``queries()`` — the contracts: every ``q_<name>`` function of this module,
+keyed by ``<name>``; each takes (spark, sf_dir) and returns a DataFrame. A
+contract is added by defining its ``q_`` function, and no other top-level name
+starts with ``q_``.
+``oracle_sql()`` — one DuckDB-runnable ANSI SQL equivalent per contract, under
+the same name; tests/test_entry_contract.py checks that the two key sets are
+equal. Fixture-based queries (kg_*) read the committed deterministic corpus
+under the repo's ``fixtures/`` by absolute path — DuckDB reads the same files.
 """
 
 from __future__ import annotations
@@ -238,7 +237,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------- queries ----
 
 
-def q_doc_gazetteer(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_doc_gazetteer_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg.stages.mentions import detect_gazetteer_mentions, gazetteer_dim
 
     gaz = gazetteer_dim(spark, DOC_GAZETTEER)
@@ -10863,276 +10862,9 @@ def q_doc_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "doc_gazetteer_match": q_doc_gazetteer,
-        "doc_mentions_full": q_doc_mentions_full,
-        "doc_ngram_spans": q_doc_ngram_spans,
-        "doc_mention_salience": q_doc_mention_salience,
-        "doc_mention_contexts": q_doc_mention_contexts,
-        "doc_token_stats": q_doc_token_stats,
-        "doc_profile": q_doc_profile,
-        "doc_quality": q_doc_quality,
-        "doc_quality_prune": q_doc_quality_prune,
-        "doc_lang_id": q_doc_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "doc_winnow_fp": q_doc_winnow_fp,
-        "doc_repetition": q_doc_repetition,
-        "doc_curate": q_doc_curate,
-        "doc_domain_cap": q_doc_domain_cap,
-        "doc_incremental_dedup": q_doc_incremental_dedup,
-        "doc_lm_bigrams": q_doc_lm_bigrams,
-        "doc_lm_score": q_doc_lm_score,
-        "doc_lm_buckets": q_doc_lm_buckets,
-        "doc_nb_lang": q_doc_nb_lang,
-        "doc_dsir": q_doc_dsir,
-        "doc_profile_diff": q_doc_profile_diff,
-        "doc_entropy": q_doc_entropy,
-        "doc_lr_quality": q_doc_lr_quality,
-        "doc_leak_split": q_doc_leak_split,
-        "doc_dense_ids": q_doc_dense_ids,
-        "doc_weighted_sample": q_doc_weighted_sample,
-        "corpus_subword_vocab": q_corpus_subword_vocab,
-        "corpus_bpe_merges": q_corpus_bpe_merges,
-        "doc_subword_tokenize": q_doc_subword_tokenize,
-        "doc_pii_redact": q_doc_pii_redact,
-        "doc_summary": q_doc_summary,
-        "doc_normalize_text": q_doc_normalize_text,
-        "doc_threshold_sweep": q_doc_threshold_sweep,
-        "doc_paragraph_dedup": q_doc_paragraph_dedup,
-        "doc_paragraph_dedup_global": q_doc_paragraph_dedup_global,
-        "doc_gopher_rules": q_doc_gopher_rules,
-        "doc_quality_rollup": q_doc_quality_rollup,
-        "doc_soft_dedup": q_doc_soft_dedup,
-        "doc_sentence_align": q_doc_sentence_align,
-        "emb_semdedup": q_emb_semdedup,
-        "web_blocklist": q_web_blocklist,
-        "kg_fact_intervals": q_kg_fact_intervals,
-        "doc_script_profile": q_doc_script_profile,
-        "doc_ngram_novelty": q_doc_ngram_novelty,
-        "doc_containment": q_doc_containment,
-        "web_parallel_urls": q_web_parallel_urls,
-        "kg_fact_freshness": q_kg_fact_freshness,
-        "doc_corpus_filter": q_doc_corpus_filter,
-        "doc_decontaminate": q_doc_decontaminate,
-        "doc_token_budget": q_doc_token_budget,
-        "doc_pack_chunks": q_doc_pack_chunks,
-        "doc_dedup_keep_best": q_doc_dedup_keep_best,
-        "doc_chunks": q_doc_chunks,
-        "doc_train_split": q_doc_train_split,
-        "doc_shard_assign": q_doc_shard_assign,
-        "orders_zorder": q_orders_zorder,
-        "doc_cms_tokens": q_doc_cms_tokens,
-        "doc_bloom_filter": q_doc_bloom_filter,
-        "doc_phrase_search": q_doc_phrase_search,
-        "doc_near_search": q_doc_near_search,
-        "kg_shacl_cardinality": q_kg_shacl_cardinality,
-        "kg_distant_supervision": q_kg_distant_supervision,
-        "kg_geo_near_join": q_kg_geo_near_join,
-        "events_bursts": q_events_bursts,
-        "emb_random_projection": q_emb_random_projection,
-        "corpus_compaction_plan": q_corpus_compaction_plan,
-        "doc_mixture": q_doc_mixture,
-        "doc_mixture_temperature": q_doc_mixture_temperature,
-        "emb_quantize": q_emb_quantize,
-        "web_url_normalize": q_web_url_normalize,
-        "doc_blocking_eval": q_doc_blocking_eval,
-        "doc_cdc_dedup": q_doc_cdc_dedup,
-        "doc_substring_dups": q_doc_substring_dups,
-        "doc_substring_rm": q_doc_substring_rm,
-        "doc_exact_dedup": q_doc_exact_dedup,
-        "doc_shingle_dedup": q_doc_shingle_dedup,
-        "doc_simhash": q_doc_simhash,
-        "doc_minhash_dedup": q_doc_minhash_dedup,
-        "doc_ngram_jaccard": q_doc_ngram_jaccard,
-        "doc_jaccard_join": q_doc_jaccard_join,
-        "graph_connected_components": q_graph_connected_components,
-        "graph_cc_incremental": q_graph_cc_incremental,
-        "graph_link_prediction": q_graph_link_prediction,
-        "web_boilerplate": q_web_boilerplate,
-        "web_redirects": q_web_redirects,
-        "web_warc_roundtrip": q_web_warc_roundtrip,
-        "graph_hits": q_graph_hits,
-        "graph_kcore": q_graph_kcore,
-        "graph_scc": q_graph_scc,
-        "graph_bowtie": q_graph_bowtie,
-        "graph_communities": q_graph_communities,
-        "graph_neighborhood": q_graph_neighborhood,
-        "graph_modularity": q_graph_modularity,
-        "graph_mixing": q_graph_mixing,
-        "graph_ktruss": q_graph_ktruss,
-        "graph_powerlaw": q_graph_powerlaw,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_pagerank_warm": q_graph_pagerank_warm,
-        "graph_degrees": q_graph_degrees,
-        "graph_triangles": q_graph_triangles,
-        "graph_khop": q_graph_khop,
-        "graph_sssp": q_graph_sssp,
-        "graph_ppr": q_graph_ppr,
-        "graph_pagerank_weighted": q_graph_pagerank_weighted,
-        "kg_entity_cooccur": q_kg_entity_cooccur,
-        "kg_cooccur_pmi": q_kg_cooccur_pmi,
-        "events_upsert_latest": q_events_upsert_latest,
-        "kg_snapshot_diff": q_kg_snapshot_diff,
-        "web_revisit_schedule": q_web_revisit_schedule,
-        "corpus_vocab": q_corpus_vocab,
-        "corpus_textrank": q_corpus_textrank,
-        "doc_rake_keyphrases": q_doc_rake_keyphrases,
-        "corpus_stopwords": q_corpus_stopwords,
-        "doc_tfidf_topk": q_doc_tfidf_topk,
-        "doc_bm25": q_doc_bm25,
-        "events_asof_join": q_events_asof_join,
-        "events_asof_forward": q_events_asof_forward,
-        "events_range_join": q_events_range_join,
-        "events_time_rollup": q_events_time_rollup,
-        "events_time_densify": q_events_time_densify,
-        "doc_kmv_distinct": q_doc_kmv_distinct,
-        "doc_hll_distinct": q_doc_hll_distinct,
-        "events_join_size_est": q_events_join_size_est,
-        "doc_skew_report": q_doc_skew_report,
-        "doc_cluster_agreement": q_doc_cluster_agreement,
-        "lineitem_correlations": q_lineitem_correlations,
-        "doc_lang_source_mi": q_doc_lang_source_mi,
-        "events_value_histogram": q_events_value_histogram,
-        "doc_corpus_overlap": q_doc_corpus_overlap,
-        "events_value_quantiles": q_events_value_quantiles,
-        "tpch_rollup": q_tpch_rollup,
-        "tpch_small_qty_revenue": q_tpch_small_qty_revenue,
-        "tpch_shipping_priority": q_tpch_shipping_priority,
-        "events_pivot": q_events_pivot,
-        "stream_interval_join": q_stream_interval_join,
-        "kg_incremental_refresh": q_kg_incremental_refresh,
-        "doc_simhash_near_dup": q_doc_simhash_near_dup,
-        "corpus_report": q_corpus_report,
-        "doc_similar_topk": q_doc_similar_topk,
-        "events_history": q_events_history,
-        "media_metadata": q_media_metadata,
-        "media_frame_sample": q_media_frame_sample,
-        "emb_ann_topk": q_emb_ann_topk,
-        "emb_mmr_topk": q_emb_mmr_topk,
-        "emb_contrastive_pairs": q_emb_contrastive_pairs,
-        "corpus_file_skipping": q_corpus_file_skipping,
-        "doc_readability": q_doc_readability,
-        "events_changepoint": q_events_changepoint,
-        "events_sequence_match": q_events_sequence_match,
-        "events_robust_outliers": q_events_robust_outliers,
-        "events_winsorize": q_events_winsorize,
-        "doc_lang_confusion": q_doc_lang_confusion,
-        "doc_isotonic": q_doc_isotonic,
-        "stream_hll_distinct": q_stream_hll_distinct,
-        "emb_kmeans": q_emb_kmeans,
-        "emb_pq_topk": q_emb_pq_topk,
-        "emb_ann_ivfpq": q_emb_ann_ivfpq,
-        "emb_neighbor_mean": q_emb_neighbor_mean,
-        "emb_cluster_sample": q_emb_cluster_sample,
-        "emb_ann_lsh": q_emb_ann_lsh,
-        "emb_ann_ivf": q_emb_ann_ivf,
-        "emb_cosine_near_dup": q_emb_cosine_near_dup,
-        "emb_cosine_near_dup_blocked": q_emb_cosine_near_dup_blocked,
-        "emb_stats": q_emb_stats,
-        "tpch_pricing_summary": q_tpch_pricing_summary,
-        "top_customers": q_top_customers,
-        "region_revenue": q_region_revenue,
-        "late_orders_semi": q_late_orders_semi,
-        "parts_never_shipped_anti": q_parts_never_shipped_anti,
-        "events_window": q_events_window,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "events_sessionize": q_events_sessionize,
-        "kg_extract": q_kg_extract,
-        "kg_ner_mentions": q_kg_ner_mentions,
-        "kg_custom_ner": q_kg_custom_ner,
-        "kg_mentions_e2e": q_kg_mentions_e2e,
-        "kg_alias_priors": q_kg_alias_priors,
-        "kg_triples_e2e": q_kg_triples_e2e,
-        "kg_predicate_stats": q_kg_predicate_stats,
-        "web_links": q_web_links,
-        "web_link_graph": q_web_link_graph,
-        "web_page_rank": q_web_page_rank,
-        "web_jsonld_triples": q_web_jsonld_triples,
-        "web_microdata_triples": q_web_microdata_triples,
-        "web_page_meta": q_web_page_meta,
-        "web_table_triples": q_web_table_triples,
-        "web_table_schema_match": q_web_table_schema_match,
-        "web_anchor_index": q_web_anchor_index,
-        "web_crawl_frontier": q_web_crawl_frontier,
-        "web_frontier_bloom": q_web_frontier_bloom,
-        "web_host_stats": q_web_host_stats,
-        "web_url_templates": q_web_url_templates,
-        "web_robots_filter": q_web_robots_filter,
-        "web_sitemaps": q_web_sitemaps,
-        "web_feeds": q_web_feeds,
-        "web_fetch_schedule": q_web_fetch_schedule,
-        "web_canonical_clusters": q_web_canonical_clusters,
-        "graph_harmonic": q_graph_harmonic,
-        "kg_tokenize": q_kg_tokenize,
-        "kg_linked_triples": q_kg_linked_triples,
-        "kg_nil_clusters": q_kg_nil_clusters,
-        "kg_context_linking": q_kg_context_linking,
-        "kg_link_disambiguated": q_kg_link_disambiguated,
-        "kg_entity_profile": q_kg_entity_profile,
-        "kg_fact_evidence": q_kg_fact_evidence,
-        "kg_infer_transitive": q_kg_infer_transitive,
-        "kg_transitive_reduction": q_kg_transitive_reduction,
-        "kg_rdfs_facts": q_kg_rdfs_facts,
-        "kg_rdfs_types": q_kg_rdfs_types,
-        "kg_path_query": q_kg_path_query,
-        "kg_entity_types": q_kg_entity_types,
-        "kg_type_violations": q_kg_type_violations,
-        "kg_fact_confidence": q_kg_fact_confidence,
-        "kg_export_ntriples": q_kg_export_ntriples,
-        "kg_export_labels": q_kg_export_labels,
-        "kg_export_roundtrip": q_kg_export_roundtrip,
-        "kg_pattern_match": q_kg_pattern_match,
-        "kg_pattern_agg": q_kg_pattern_agg,
-        "kg_rule_materialize": q_kg_rule_materialize,
-        "kg_rule_mining": q_kg_rule_mining,
-        "kg_polar_triples": q_kg_polar_triples,
-        "kg_pattern_optional": q_kg_pattern_optional,
-        "kg_fact_merge": q_kg_fact_merge,
-        "kg_pronoun_coref": q_kg_pronoun_coref,
-        "kg_coref_rewrite": q_kg_coref_rewrite,
-        "kg_stream_facts": q_kg_stream_facts,
-        "kg_fact_conflicts": q_kg_fact_conflicts,
-        "kg_source_trust": q_kg_source_trust,
-        "kg_fact_beliefs": q_kg_fact_beliefs,
-        "kg_verbalize": q_kg_verbalize,
-        "kg_entity_descriptions": q_kg_entity_descriptions,
-        "kg_predicate_canon": q_kg_predicate_canon,
-        "kg_hearst_taxonomy": q_kg_hearst_taxonomy,
-        "kg_abbreviations": q_kg_abbreviations,
-        "kg_record_linkage": q_kg_record_linkage,
-        "kg_fs_em": q_kg_fs_em,
-        "kg_timex_normalize": q_kg_timex_normalize,
-        "kg_measure_normalize": q_kg_measure_normalize,
-        "kg_fact_time_scope": q_kg_fact_time_scope,
-        "kg_hybrid_triples": q_kg_hybrid_triples,
-        "kg_person_names": q_kg_person_names,
-        "kg_coord_normalize": q_kg_coord_normalize,
-        "kg_quotes": q_kg_quotes,
-        "kg_alias_fuzzy": q_kg_alias_fuzzy,
-        "kg_random_walks": q_kg_random_walks,
-        "kg_walk_skipgrams": q_kg_walk_skipgrams,
-        "kg_node2vec_walks": q_kg_node2vec_walks,
-        "kg_sample_neighborhoods": q_kg_sample_neighborhoods,
-        "kg_lp_ranks": q_kg_lp_ranks,
-        "kg_lp_metrics": q_kg_lp_metrics,
-        "kg_sgns_table": q_kg_sgns_table,
-        "kg_sgns_negatives": q_kg_sgns_negatives,
-        "kg_negative_samples": q_kg_negative_samples,
-        "kg_ner_errors": q_kg_ner_errors,
-        "kg_annotate": q_kg_annotate,
-        "kg_stream_triples": q_kg_stream_triples,
-        "kg_stream_markup": q_kg_stream_markup,
-        "stream_mention_rates": q_stream_mention_rates,
-        "stream_link_rates": q_stream_link_rates,
-        "stream_sessionize": q_stream_sessionize,
-        "stream_dedup_pages": q_stream_dedup_pages,
-        "stream_index_dedup": q_stream_index_dedup,
-        "web_anchor_aliases": q_web_anchor_aliases,
-        "kg_gazetteer_snapshots": q_kg_gazetteer_snapshots,
-        "kg_checkpoint_resume": q_kg_checkpoint_resume,
-        "kg_canonical": q_kg_canonical,
-    }
+    """Every contract, keyed by name: the module's ``q_<name>`` functions."""
+    return {n[2:]: f for n, f in globals().items()
+            if n.startswith("q_") and callable(f)}
 
 
 def oracle_sql() -> dict[str, str]:

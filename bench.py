@@ -52,78 +52,35 @@ def ensure_corpus() -> str:
     return str(path)
 
 
-def cpu_busy_frac(interval: float = 0.5) -> float:
-    """System-wide busy fraction from /proc/stat over ``interval`` seconds —
-    unlike loadavg (a trailing EMA) this measures contention NOW. The bench
-    runs on a shared box; a run started at high busy-fraction is annotated
-    as contended rather than silently reported (VERDICT r2 item 8: the
-    r1-vs-r2 mentions confusion was half measurement environment)."""
-
-    def snap() -> tuple[int, int]:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()[1:]
-        vals = [int(x) for x in parts]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
-        return sum(vals), idle
-
-    t0, i0 = snap()
-    time.sleep(interval)
-    t1, i1 = snap()
-    total = max(t1 - t0, 1)
-    return round(1.0 - (i1 - i0) / total, 3)
-
-
-#: busy fraction above which a bench run is flagged as contended
-CONTENTION_THRESHOLD = 0.35
-
-
-class StatSampler:
-    """Samples /proc/stat in a background thread for the whole suite run and
-    reports mean steal/iowait fractions. On a shared virtualized box the
-    guest can look idle while the HOST starves it — wall times inflate with
-    zero guest-visible busy CPU; steal (and D-state iowait) are the only
-    in-guest evidence. A run with nonzero steal is not comparable across
-    rounds (observed: identical plans swinging 13s..300s under host
-    interference)."""
-
-    def __init__(self, interval: float = 2.0) -> None:
-        import threading
-
-        self.interval = interval
-        self.samples: list[tuple[int, ...]] = []
-        self._stop = threading.Event()
-        self._t = threading.Thread(target=self._loop, daemon=True)
-
-    @staticmethod
-    def _snap() -> tuple[int, ...]:
-        with open("/proc/stat") as fh:
-            return tuple(int(x) for x in fh.readline().split()[1:])
-
-    def _loop(self) -> None:
-        while not self._stop.is_set():
-            self.samples.append(self._snap())
-            self._stop.wait(self.interval)
-
-    def start(self) -> "StatSampler":
-        self.samples.append(self._snap())
-        self._t.start()
-        return self
-
-    def stop(self) -> dict[str, float]:
-        self._stop.set()
-        self._t.join(timeout=5)
-        self.samples.append(self._snap())
-        a, b = self.samples[0], self.samples[-1]
-        d = [y - x for x, y in zip(a, b)]
-        tot = max(sum(d), 1)
-        idle = d[3]
-        iowait = d[4] if len(d) > 4 else 0
-        steal = d[7] if len(d) > 7 else 0
-        return {
-            "cpu_busy_frac_during": round(1.0 - (idle + iowait) / tot, 3),
-            "cpu_iowait_frac_during": round(iowait / tot, 3),
-            "cpu_steal_frac_during": round(steal / tot, 3),
-        }
+def replica_text(text: str, rep: str):
+    """Column: the lowercased words of ``text`` with the token
+    ``xrep<rep>x`` after every 7th word and after the last one, joined by
+    single spaces. Every 8-word window of a replica then holds its marker,
+    so no window of original words repeats across replicas. A document
+    with no words stays empty."""
+    every = 7
+    words = F.filter(
+        F.split(F.lower(text), r"\s+"), lambda x: x != F.lit("")
+    )
+    marker = F.concat(F.lit("xrep"), F.col(rep).cast("string"), F.lit("x"))
+    marked = F.array_join(
+        F.flatten(
+            F.transform(
+                F.sequence(
+                    F.lit(0),
+                    F.greatest(
+                        F.ceil(F.size(words) / every).cast("int") - 1,
+                        F.lit(0),
+                    ),
+                ),
+                lambda i: F.concat(
+                    F.slice(words, i * every + 1, every), F.array(marker)
+                ),
+            )
+        ),
+        " ",
+    )
+    return F.when(F.size(words) == 0, F.lit("")).otherwise(marked)
 
 
 def timed_twice(fn) -> float:
@@ -623,36 +580,12 @@ def run_suite(spark, sf_dir: str) -> dict:
         # corpus's natural dup mass — the replication sizes the stage
         # without reshaping the operator's duplicate profile. (walls
         # comparable only from r5 windows on)
-        _kk = 7
-        _w = F.filter(
-            F.split(F.lower("text"), r"\s+"), lambda x: x != F.lit("")
-        )
-        _marker = F.concat(
-            F.lit("xrep"), F.col("_rep").cast("string"), F.lit("x")
-        )
-        _marked = F.array_join(
-            F.flatten(
-                F.transform(
-                    F.sequence(
-                        F.lit(0),
-                        F.greatest(
-                            F.ceil(F.size(_w) / _kk).cast("int") - 1,
-                            F.lit(0),
-                        ),
-                    ),
-                    lambda i: F.concat(
-                        F.slice(_w, i * _kk + 1, _kk), F.array(_marker)
-                    ),
-                )
-            ),
-            " ",
-        )
         docs_to = docs_to.crossJoin(
             spark.range(to_repl).select(F.col("id").alias("_rep"))
         ).select(
             F.concat_ws("#", "doc_id", "_rep").alias("doc_id"),
             F.when(F.col("_rep") == 0, F.col("text"))
-            .otherwise(_marked)
+            .otherwise(replica_text("text", "_rep"))
             .alias("text"),
         )
         to_pages = to_pages * to_repl
@@ -792,25 +725,13 @@ def main() -> int:
     from kg.session import get_spark
 
     load_start = os.getloadavg()[0]  # shared box: record neighbor pressure
-    busy_start = cpu_busy_frac()
-    sampler = StatSampler().start()
     spark = get_spark(master=master, app_name="kg-bench",
                       shuffle_partitions=max(int(cpus) * 2, 8))
     spark.sparkContext.setLogLevel("ERROR")
     result = run_suite(spark, sf_dir)
     spark.stop()
-    result["extra"].update(sampler.stop())
     result["extra"]["loadavg_start"] = round(load_start, 2)
     result["extra"]["loadavg_end"] = round(os.getloadavg()[0], 2)
-    result["extra"]["cpu_busy_frac_start"] = busy_start
-    result["extra"]["cpu_busy_frac_end"] = cpu_busy_frac()
-    if (
-        busy_start > CONTENTION_THRESHOLD
-        or result["extra"]["cpu_steal_frac_during"] > 0.02
-    ):
-        # do not let a noisy-neighbor/starved-host run masquerade as a
-        # regression
-        result["extra"]["contended"] = True
 
     total = round(sum(result["timings"].values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

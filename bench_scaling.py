@@ -341,37 +341,6 @@ def main() -> int:
         lines.append(
             f"| {q} | {results[lo]['queries'][q]} | {results[hi]['queries'][q]} |"
         )
-    best_w = max(
-        history, key=lambda w: w["effs"]["pipeline_docs_per_sec"]
-    ) if history else None
-
-    # Per-row efficiency max over PAYLOAD-COMPARABLE windows. Contention
-    # on this shared box is strictly subtractive (nothing a neighbor
-    # does can make the engine scale better), so for each metric the max
-    # over windows measuring the SAME payload estimates the engine's
-    # machine property — the same argument the cross-window pipeline
-    # headline already uses, applied per row. Comparability floors are
-    # the payload-change dates from the notes below: textops changed in
-    # the r5 perturbation window; ranking/curation payloads changed
-    # 2026-08-21; everything else is comparable from the 2026-08-19
-    # honesty fix.
-    COMPARABLE_FROM = {
-        "textops_docs_per_sec": "2026-08-21T19:00",
-        "curation_docs_per_sec": "2026-08-21",
-        "textrank_docs_per_sec": "2026-08-20",
-        "miners_docs_per_sec": "2026-08-19",
-    }
-    DEFAULT_FLOOR = "2026-08-19"
-    row_max = {}
-    for key in EFF_KEYS:
-        floor = COMPARABLE_FROM.get(key, DEFAULT_FLOOR)
-        vals = [
-            (w["effs"][key], w["ts"])
-            for w in history
-            if key in w["effs"] and w["ts"] >= floor
-        ]
-        if vals:
-            row_max[key] = max(vals)
     lines += [
         "",
         "## Measurement windows (cross-run variance on this shared box)",
@@ -381,10 +350,7 @@ def main() -> int:
         "cost memory bandwidth / SMT capacity that barely registers as",
         "steal yet hits the high-parallelism leg hardest, so the measured",
         "ratio swings BETWEEN windows even when /proc/stat shows the VM",
-        "idle. That contention is strictly subtractive — nothing a",
-        "neighbor does can make the engine scale BETTER than it does —",
-        "so the max over windows estimates the engine's machine",
-        "property; every window's full raw JSON is in BENCH/history.jsonl.",
+        "idle. Every window's full raw JSON is in BENCH/history.jsonl.",
         "",
         "| window (UTC) | pipeline eff | mentions eff | triples eff |"
         " weblinks eff | curation eff | lm eff | textops eff |"
@@ -407,30 +373,10 @@ def main() -> int:
             ) if w.get("hw_eff") else "-",
         )
         for w in history
-    ] + ([
-        "",
-        f"- **cross-window headline (max pipeline eff over windows):"
-        f" {best_w['effs']['pipeline_docs_per_sec']}** (target >= 0.8),"
-        f" measured {best_w['ts']};"
-        f" detail tables below are the most recent window.",
-    ] if best_w else []) + ([
-        "",
-        "Per-row efficiency max over payload-comparable windows (same",
-        "subtractive-contention argument as the headline, applied per",
-        "row; each metric only compares windows since its last payload",
-        "change — textops from the r5 replica-perturbation window,",
-        "curation from 2026-08-21, textrank from 2026-08-20, the rest",
-        "from the 2026-08-19 honesty fix):",
-        "",
-        "| metric | max eff (comparable windows) | measured (UTC) |",
-        "|---|---|---|",
     ] + [
-        f"| {k} | **{v[0]}** | {v[1]} |"
-        for k, v in row_max.items()
-    ] if row_max else []) + [
         "",
-        f"- this window's scaling efficiency (pipeline docs/sec): "
-        f"**{effs['pipeline_docs_per_sec']}**; "
+        f"- this window's scaling efficiency (pipeline docs/sec, target"
+        f" >= 0.8): **{effs['pipeline_docs_per_sec']}**; "
         f"hardware-normalized (raw / hardware ceiling above): "
         f"**{round(effs['pipeline_docs_per_sec'] / (hw[2 * hi] / hw[2 * lo]), 3)}**",
         "- mentions runs with the gazetteer plan hoisted out of the timed"
@@ -444,10 +390,6 @@ def main() -> int:
         " materialize barriers over ~1.5k facts), the same disposition"
         " as near_dup; the corpus-sized part of its plan is the same"
         " link+join shape the pipeline metric already measures.",
-        "- cpu_busy_frac_start/_end in the raw JSON are /proc/stat busy"
-        " fractions sampled over 0.5s at run start/end; a run with"
-        " busy>0.35 at start is flagged `contended` and should not be"
-        " compared across rounds.",
         "- each leg's JVM heap scales with its core count (constant"
         " memory per core, like real executors): a fixed heap makes the"
         " high-parallelism leg GC-bound and understates cluster scaling"

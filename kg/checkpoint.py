@@ -290,52 +290,6 @@ class CheckpointedPipeline:
             df = df.drop("peak_mb")
         return df
 
-    def compact_stage(
-        self, stage: str, max_records_per_file: int = 1_000_000
-    ) -> int:
-        """Small-file compaction for a completed stage: rewrite its output
-        at ~one file per url_hash_bucket (splitting only past
-        ``max_records_per_file``) and swap it in. Returns the new file
-        count.
-
-        Why it exists: every stage task writes its own file per bucket
-        partition it touches, so a stage at shuffle-parallelism P over B
-        buckets can leave O(P x B) tiny parquet files — at 4096 buckets
-        that is millions of files whose open/footer costs dominate
-        downstream scans (the classic 100-TB small-file problem; with
-        Iceberg jars this is `rewrite_data_files`). Content, schema,
-        partition layout, and lineage are unchanged — resume still sees
-        the same completed buckets; only the file layout changes.
-
-        Crash safety: the rewrite lands in a `__compacting` sibling and
-        is swapped via two directory renames; a crash between them
-        leaves either the old or the new layout fully intact plus a
-        leftover directory (cleaned on the next call), never a partially
-        merged stage.
-        """
-        import shutil
-
-        path = Path(self.stage_output_path(stage))
-        tmp = Path(str(path) + "__compacting")
-        old = Path(str(path) + "__precompact")
-        for leftover in (tmp, old):
-            if leftover.exists():
-                shutil.rmtree(leftover)
-        df = self.spark.read.parquet(str(path))
-        part_cols = [c for c in ("has_error", "url_hash_bucket")
-                     if c in df.columns]
-        (
-            df.repartition(*[F.col(c) for c in part_cols])
-            .write.partitionBy(*part_cols)
-            .option("maxRecordsPerFile", max_records_per_file)
-            .mode("overwrite")
-            .parquet(str(tmp))
-        )
-        path.rename(old)
-        tmp.rename(path)
-        shutil.rmtree(old)
-        return len(list(path.rglob("*.parquet")))
-
     def read_errors(self) -> DataFrame:
         """Accumulated (url, stage, error) rows across runs (O21),
         DEDUPLICATED: the append is at-least-once on a crash between the

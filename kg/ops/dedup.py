@@ -1227,7 +1227,7 @@ def remove_duplicate_substrings(
     k: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    arrow_grams: bool | None = None,
+    arrow_grams: bool = False,
 ) -> DataFrame:
     """ExactSubstr REMOVAL (the rewrite half of Lee et al.'s
     "Deduplicating Training Data Makes Language Models Better"; the
@@ -1254,12 +1254,6 @@ def remove_duplicate_substrings(
     narrow JVM expressions.
     """
     k = int(k)
-    if arrow_grams is None:
-        import os
-
-        arrow_grams = os.environ.get(
-            "SPARK_GRAFT_GRAM_ARROW", ""
-        ).lower() in ("1", "true", "yes")
     base = docs.select(F.col(id_col), _words(text_col).alias("_w"))
     gram_keys = (
         gram_hash_arrow(F.col("_w"), k)
@@ -1282,8 +1276,7 @@ def remove_duplicate_substrings(
     # venue switch (r5, BENCH/AB_TEXTOPS_r5.md): arrow_grams moves the
     # SAME key computation to an Arrow-batched pandas UDF
     # (gram_hash_arrow — bit-identical keys, per-batch word-hash memo);
-    # default stays the JVM expression, env SPARK_GRAFT_GRAM_ARROW or
-    # the kwarg opts in per run
+    # default stays the JVM expression; callers opt in with the kwarg
     exploded = base.select(
         F.col(id_col),
         F.posexplode(gram_keys).alias("pos", "gram_h"),

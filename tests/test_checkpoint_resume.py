@@ -281,47 +281,6 @@ def test_run_stage_starts_no_job_after_the_write(spark, pages_sdf, tmp_path):
     assert _lineage_n_out(pipe, "s") == _bucket_counts(pipe.read_stage("s"))
 
 
-def test_compact_stage_preserves_content_and_lineage(spark, pages_sdf,
-                                                     tmp_path):
-    """Compaction rewrites the stage at ~one file per bucket: identical
-    rows, identical completed-bucket set, strictly fewer files, and a
-    post-compaction resume is still a no-op."""
-    from pathlib import Path
-
-    base = str(tmp_path / "ckpt")
-    gaz = gazetteer_dim(spark, synth.GAZETTEER_DATA)
-    pipe = CheckpointedPipeline(spark, base, n_buckets=8)
-    bucketed = add_bucket(pages_sdf.select("url", "text"), 8)
-
-    fn = lambda df: detect_mentions(df, gaz, None).join(  # noqa: E731
-        bucketed.select("url", "url_hash_bucket").distinct(), "url"
-    )
-    # run the stage at high shuffle parallelism so each bucket's rows land
-    # in many tasks -> many small files per bucket (the layout compaction
-    # exists to fix; a real stage at P=4096 is far worse)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    aqe = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "40")
-    try:
-        before = _rows(pipe.run_stage("mentions", bucketed, fn))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-    stage_dir = Path(pipe.stage_output_path("mentions"))
-    files_before = len(list(stage_dir.rglob("*.parquet")))
-
-    files_after = pipe.compact_stage("mentions")
-    assert files_after < files_before
-    assert files_after <= 8  # ~one file per bucket at this size
-    assert _rows(pipe.read_stage("mentions")) == before
-    assert pipe.completed_buckets("mentions") == set(range(8))
-    # resume after compaction: still a no-op with identical output
-    assert _rows(pipe.run_stage("mentions", bucketed, fn)) == before
-    # idempotent: compacting twice is safe
-    assert pipe.compact_stage("mentions") == files_after
-
-
 def test_stage_names_are_checked():
     import run_pipeline
 
